@@ -232,8 +232,16 @@ def _anchor_ratio_median(
     timings: dict, anchors: dict, scale_env: str
 ) -> float | None:
     """Median of per-query reading / idle-anchor ratios over a basket —
-    the interference-wave telltale (see the anchor-table comment)."""
-    scale = float(os.environ.get(scale_env, "1.0"))
+    the interference-wave telltale (see the anchor-table comment). A
+    malformed or non-positive scale falls back to 1.0 with a warning."""
+    raw = os.environ.get(scale_env, "1.0")
+    try:
+        scale = float(raw)
+    except ValueError:
+        scale = 0.0
+    if not scale > 0:  # also rejects nan
+        print(f"bench: ignoring {scale_env}={raw!r}; using 1.0", file=sys.stderr)
+        scale = 1.0
     ratios = [
         timings[q] / (a * scale)
         for q, a in anchors.items()
@@ -433,10 +441,10 @@ def _run_jh11_split(spark, args, spreads_acc: list[float]) -> tuple[dict, dict]:
         index (round 14: the recurring daily cost without the
         O(domain) re-derivation jh11_batch_apply still pays).
 
-    The stored map is persisted and forced BEFORE the apply timer
-    starts, so the apply measurement can't silently re-run day-1 work
-    through lineage. Maps are released per repeat (and at the end) so
-    repeats don't accumulate cached relations."""
+    The stored map is forced BEFORE the apply timer starts, so the
+    apply measurement can't silently re-run day-1 work: the closure's
+    per-round localCheckpoint already truncates its lineage, so the
+    map needs no cache (and no release between repeats)."""
     import statistics as _st  # local: keep module top unchanged
 
     import shutil as _sh  # local: keep module top unchanged
@@ -445,8 +453,6 @@ def _run_jh11_split(spark, args, spreads_acc: list[float]) -> tuple[dict, dict]:
     from jobhouse_spark.operators.entity import (
         EntityGramIndex,
         build_entity_index,
-        persist_entity_mapping,
-        release_persisted_entity_maps,
         resolve_entities,
         resolve_entities_incremental,
         resolve_entities_incremental_indexed,
@@ -461,13 +467,12 @@ def _run_jh11_split(spark, args, spreads_acc: list[float]) -> tuple[dict, dict]:
         if args.gc_between_repeats and rep > 0:
             spark.sparkContext._jvm.System.gc()
             time.sleep(0.5)
-        release_persisted_entity_maps()
         day1, batch = jh11_split_inputs(spark)
 
         t0, c0 = time.perf_counter(), time.process_time()
-        stored = persist_entity_mapping(resolve_entities(day1))
-        # noop write materializes the persisted map (same honest forcer
-        # as run_set) so the apply phase starts from a warm stored map
+        stored = resolve_entities(day1)
+        # noop write forces the stored map (same honest forcer as
+        # run_set) so the apply phase starts from a computed map
         stored.write.format("noop").mode("overwrite").save()
         walls["jh11_day0_resolve"].append(time.perf_counter() - t0)
         cpus["jh11_day0_resolve"].append(time.process_time() - c0)
@@ -493,7 +498,6 @@ def _run_jh11_split(spark, args, spreads_acc: list[float]) -> tuple[dict, dict]:
             cpus["jh12_apply"].append(time.process_time() - c0)
         finally:
             _sh.rmtree(idx_dir, ignore_errors=True)
-    release_persisted_entity_maps()
 
     wall_out, cpu_out = {}, {}
     for key in walls:

@@ -1,8 +1,26 @@
-"""Leak-aware eager materialization barrier (shared by the bronze
-quarantine split, minhash's default lifecycle, and the incremental
-merge's write barrier).
+"""The engine's one cache-and-checkpoint lifecycle.
 
-The trade-space, learned the hard way across review rounds:
+Three rules, and no other idiom (no caller-owned cache handles, no
+module-level registries of persisted frames):
+
+1. An eager barrier is ``materialize_barrier`` (below). Callers: the
+   bronze quarantine split (``sources/bronze.py``), the incremental
+   merge's write barrier (``operators/incremental.py``), minhash's
+   output pairs and ``minhash_incremental_pairs``, the n-gram Jaccard
+   hot-shingle pruning (``operators/similarity.py``), the incremental
+   entity resolvers' verified edges (``operators/entity.py``),
+   ``semantic_dedup``, ``semantic_dedup_collapsed`` and
+   ``kmeans_refine`` (``operators/ann.py``), and ``hash_ranked`` /
+   ``mixture_select_budget`` (``operators/mixture.py``).
+2. A relation reused within one call is ``persist()``-ed and
+   ``unpersist()``-ed in a ``finally`` before the call returns.
+3. Lineage truncation inside an iterative loop stays lazy: each
+   ``connected_components`` round ends with ``localCheckpoint(eager=False)``
+   that the round's own convergence job fills, so its output (and
+   everything built on it, such as the entity resolution mapping)
+   needs no further cache.
+
+The barrier's trade-space, learned the hard way across review rounds:
 
 - ``persist()`` without a matching unpersist leaks a catalog-cache
   entry per call in long-lived sessions.

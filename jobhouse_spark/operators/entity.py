@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from jobhouse_spark.materialize import materialize_barrier
 from jobhouse_spark.operators.graph import connected_components
 
 LEGAL_SUFFIX_RE = r" (llc|ltd|inc|group)$"
@@ -260,44 +261,6 @@ def resolve_entities(
 
 
 # ---------------------------------------------------------------------------
-# Persisted-mapping lifecycle (round-12 verdict hygiene item)
-# ---------------------------------------------------------------------------
-
-# name->canonical mappings handed out by persist_entity_mapping. The
-# mart queries (jh8/jh9, queries/jobhouse_gold.py) must cache the
-# mapping — the adaptive-broadcast size probe and the map-back join
-# both consume it, and without a cache the whole iterative resolution
-# runs twice — but a registry query has no lifecycle hook to unpersist
-# at, so a bare .persist() accumulated one cached relation per mart
-# build in long-lived sessions. Same discipline as
-# operators/similarity._PERSISTED_INPUTS (round-11 review).
-_PERSISTED_MAPPINGS: list[DataFrame] = []
-
-
-def persist_entity_mapping(mapping: DataFrame) -> DataFrame:
-    """Persist a resolution mapping and track the handle. Callers that
-    build marts repeatedly in one session call
-    ``release_persisted_entity_maps()`` between builds (the jh8/jh9
-    queries do it themselves on entry, so repeated mart builds hold at
-    most ONE live mapping cache regardless of build count)."""
-    out = mapping.persist()
-    _PERSISTED_MAPPINGS.append(out)
-    return out
-
-
-def release_persisted_entity_maps() -> int:
-    """Unpersist every tracked mapping. Safe to call anytime —
-    ``unpersist()`` on a persisted (not checkpointed) frame is a hint:
-    a consumer that still needs the mapping recomputes it from lineage
-    and stays correct. Returns the count released."""
-    n = 0
-    while _PERSISTED_MAPPINGS:
-        _PERSISTED_MAPPINGS.pop().unpersist()
-        n += 1
-    return n
-
-
-# ---------------------------------------------------------------------------
 # Incremental resolution against a stored mapping (round 13)
 # ---------------------------------------------------------------------------
 
@@ -494,8 +457,8 @@ def _apply_verified_edges(
     domain is 100M+ names and the shuffle crosses a network."""
     # materialize the verified edges once: referenced three times
     # below, and their candidate-generation lineage is the expensive
-    # part; batch-sized, so the checkpoint is small
-    edges_new = edges_new.localCheckpoint(eager=True)
+    # part; batch-sized, so the barrier is small
+    edges_new = materialize_barrier(edges_new)
     # ---- contract old endpoints to their stored canonical ----
     endpoints = (
         edges_new.select(F.col("src").alias("name"))

@@ -500,12 +500,14 @@ def minhash_incremental_pairs(
         .distinct()
     )
     all_feat = index_features.select("doc", "features").unionByName(new_feat)
-    out = _exact_jaccard_pairs(cand, all_feat, jaccard_threshold)
     from jobhouse_spark.materialize import materialize_barrier  # noqa: PLC0415
 
-    out = materialize_barrier(out)
-    new_feat.unpersist()
-    return out
+    try:
+        return materialize_barrier(
+            _exact_jaccard_pairs(cand, all_feat, jaccard_threshold)
+        )
+    finally:
+        new_feat.unpersist()
 
 
 def minhash_near_duplicates(
@@ -519,7 +521,6 @@ def minhash_near_duplicates(
     shingle_n: int = 3,
     max_bucket_size: int = 500,
     feature_hash: str = "xxhash64",
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs over word-shingle sets.
 
@@ -558,43 +559,25 @@ def minhash_near_duplicates(
     md5 — the knob a differential oracle uses to verify this exact
     pipeline end-to-end, see l2c_minhash_checked).
 
-    ``materialize`` — how the internal ``featured`` relation (consumed
-    three times: signatures + both sides of the exact-Jaccard rejoin)
-    is shared, and who cleans it up. The three options trade leak
-    safety vs laziness vs fault tolerance; none changes results:
+    Precondition: ``id_col`` is unique. A duplicated id duplicates the
+    exact-Jaccard rejoin's rows for that id; pairs stay strict
+    (doc_a < doc_b), so an id is never paired with itself.
 
-    - "checkpoint" (default): persist ``featured``, run the pipeline
-      EAGERLY, checkpoint the (small, threshold-filtered) output pair
-      list, release ``featured``. Leak-free in long-lived sessions
-      with zero caller obligations. TRADE: the call blocks on full
-      execution, and ``localCheckpoint`` truncates lineage into
-      non-fault-tolerant executor blocks — if an executor is lost
-      AFTER the call returns, the result cannot be recomputed (the
-      original plan is gone). When the session has a RELIABLE
-      checkpoint dir configured (``sc.setCheckpointDir``), that is
-      used instead, which survives executor loss.
-    - "persist": LAZY — ``featured`` stays persisted and the returned
-      plan is fully recomputable (fault-tolerant). The caller owns
-      cleanup: the persisted relation is attached to the returned
-      DataFrame as ``df.jh_cached_inputs`` — capture it BEFORE chaining
-      (transformations return new DataFrames without the attribute),
-      and unpersist each after consuming. ``release_persisted_inputs()``
-      frees all outstanding ones when handles were lost.
-    - "lazy": no persist, no checkpoint — a pure plan with zero
-      session state and full fault tolerance; the tokenize/shingle/
-      hash chain recomputes up to three times when the plan runs.
+    Eager: ``featured`` (consumed three times: signatures + both sides of
+    the exact-Jaccard rejoin) is persisted, the pipeline runs to a
+    ``materialize_barrier`` over the small threshold-filtered pair list,
+    and ``featured`` is released before returning. Leak-free in a
+    long-lived session with no caller obligations; the fault-tolerance
+    trade is the barrier's (see ``jobhouse_spark.materialize``).
     """
-    if materialize not in ("checkpoint", "persist", "lazy"):
-        raise ValueError(f"unknown materialize mode {materialize!r}")
+    from jobhouse_spark.materialize import materialize_barrier  # noqa: PLC0415
+
+    # persist so the tokenize/shingle/hash chain runs one corpus scan,
+    # not three. The cached relation is one int-array column — far
+    # smaller than the text — and spills to disk if not.
     featured = _minhash_featurize(
         docs, id_col, text_col, shingle_n, num_features, feature_hash
-    )
-    # consumed three times below (signatures + both sides of the exact-
-    # Jaccard rejoin); persist so the tokenize/shingle/hash chain runs
-    # one corpus scan, not three. The cached relation is one int-array
-    # column — far smaller than the text — and spills to disk if not.
-    if materialize != "lazy":
-        featured = featured.persist()
+    ).persist()
     banded = _band_signatures(featured, seed, num_hash_tables)
     capped = _capped_buckets(banded, max_bucket_size)
     # In-row pair generation over the CAPPED buckets (round 15, guide
@@ -606,7 +589,8 @@ def minhash_near_duplicates(
     # cap-bounded, <= max_bucket_size) membership once and expanding
     # the C(members, 2) pairs with array transforms yields the
     # IDENTICAL pair set — members sorted ascending, x paired with
-    # every later y, so doc_a < doc_b — from ONE pass, and the
+    # every later y > x, so doc_a < doc_b even when an id repeats (the
+    # self-join's a.doc < b.doc) — from ONE pass, and the
     # groupBy reuses the window's (band_idx, sig) hash partitioning
     # (no new exchange). The spill-safe window cap stays in front, so
     # a degenerate bucket still sorts/spills gracefully and the
@@ -619,7 +603,7 @@ def minhash_near_duplicates(
             F.explode(
                 F.expr(
                     "flatten(transform(ms, (x, i) -> "
-                    "transform(slice(ms, i + 2, size(ms)), "
+                    "transform(filter(slice(ms, i + 2, size(ms)), y -> y > x), "
                     "y -> struct(x AS doc_a, y AS doc_b))))"
                 )
             ).alias("p")
@@ -627,60 +611,14 @@ def minhash_near_duplicates(
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
-    out = _exact_jaccard_pairs(cand, featured, jaccard_threshold)
-    if materialize == "checkpoint":
-        # Materialize eagerly, then release the cache: without this,
-        # every invocation in a long-lived session (bench repeats,
-        # library callers that never clearCache()) leaks one more cached
-        # relation. The checkpoint truncates lineage so the unpersisted
-        # `featured` is never recomputed; the checkpointed relation is
-        # the OUTPUT pair list (threshold-filtered), far smaller than
-        # the corpus. Reliable checkpoint (survives executor loss) when
-        # the session has a checkpoint dir; otherwise localCheckpoint,
-        # whose blocks are ContextCleaner-managed (freed when the
-        # returned DataFrame is GC'd) but NOT recomputable after
-        # executor loss — the fault-tolerance trade in the docstring.
-        from jobhouse_spark.materialize import materialize_barrier  # noqa: PLC0415
-
-        out = materialize_barrier(out)
+    try:
+        # The barrier truncates lineage, so the released `featured` is
+        # never recomputed; what it keeps is the OUTPUT pair list.
+        return materialize_barrier(
+            _exact_jaccard_pairs(cand, featured, jaccard_threshold)
+        )
+    finally:
         featured.unpersist()
-        return out
-    if materialize == "persist":
-        # lazy + fault-tolerant; the caller owns the cache release.
-        # NOTE: grab jh_cached_inputs from THIS object before chaining —
-        # every transformation returns a new DataFrame without the
-        # attribute. The module registry backs the lost-handle case:
-        # release_persisted_inputs() frees everything outstanding.
-        # Self-pruning: entries the caller already unpersisted (storage
-        # level back to NONE) drop out here, so well-behaved callers
-        # don't accumulate dead references in a long-lived session.
-        _PERSISTED_INPUTS[:] = [
-            d
-            for d in _PERSISTED_INPUTS
-            if d.storageLevel.useMemory or d.storageLevel.useDisk
-        ]
-        out.jh_cached_inputs = [featured]
-        _PERSISTED_INPUTS.append(featured)
-        return out
-    return out
-
-
-# featured relations handed out by materialize='persist' (in case the
-# caller loses the jh_cached_inputs handle through chaining)
-_PERSISTED_INPUTS: list[DataFrame] = []
-
-
-def release_persisted_inputs() -> int:
-    """Unpersist every cached input relation handed out by
-    ``minhash_near_duplicates(materialize='persist')`` calls in this
-    process — the coarse escape hatch when per-call handles were lost
-    through DataFrame chaining. Safe to call anytime (unpersist is a
-    hint; consumed results are unaffected). Returns the count released."""
-    n = 0
-    while _PERSISTED_INPUTS:
-        _PERSISTED_INPUTS.pop().unpersist()
-        n += 1
-    return n
 
 
 def ngram_jaccard_pairs(

@@ -526,8 +526,6 @@ def jh8_employer_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobhouse_spark.operators.entity import (  # noqa: PLC0415
         apply_entity_map,
         normalize_entity_name,
-        persist_entity_mapping,
-        release_persisted_entity_maps,
         resolve_entities,
     )
 
@@ -535,20 +533,7 @@ def jh8_employer_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     withn = silver.withColumn(
         "norm_name", normalize_entity_name(F.col("employer_name"))
     )
-    # tracked persist (round-12 verdict hygiene): apply_entity_map's
-    # size probe and the map-back join both consume the mapping, so it
-    # must cache — but a registry query has no lifecycle hook to
-    # unpersist at, and a bare .persist() accumulated one cached
-    # relation per mart build in long-lived sessions. The release-on-
-    # entry + tracked-handle discipline (mirrors similarity.py's
-    # _PERSISTED_INPUTS) bounds the session to at most ONE live
-    # mapping cache across any number of mart builds; unpersist is a
-    # hint, so releasing a mapping some other frame still references
-    # merely recomputes — never corrupts. Cardinality: entities.
-    release_persisted_entity_maps()
-    mapping = persist_entity_mapping(
-        resolve_entities(silver.select(F.col("employer_name").alias("name")))
-    )
+    mapping = resolve_entities(silver.select(F.col("employer_name").alias("name")))
     return (
         apply_entity_map(withn, mapping)
         .groupBy(F.col("canonical").alias("canonical_employer"))
@@ -670,8 +655,6 @@ def jh9_repost_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobhouse_spark.operators.entity import (  # noqa: PLC0415
         apply_entity_map,
         normalize_entity_name,
-        persist_entity_mapping,
-        release_persisted_entity_maps,
         resolve_entities,
     )
 
@@ -682,12 +665,7 @@ def jh9_repost_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "content_key",
         F.concat_ws("|", F.lower(F.trim("title")), F.lower(F.trim("requirement"))),
     )
-    # tracked persist + release-on-entry: probe + join both consume
-    # it; at most one live mapping cache per session (see jh8)
-    release_persisted_entity_maps()
-    mapping = persist_entity_mapping(
-        resolve_entities(silver.select(F.col("employer_name").alias("name")))
-    )
+    mapping = resolve_entities(silver.select(F.col("employer_name").alias("name")))
     per_content = (
         apply_entity_map(withn, mapping)
         .groupBy(F.col("canonical"), F.col("content_key"))
@@ -845,15 +823,12 @@ def jh11_incremental_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta, not a domain rebuild (measured:
     tools/entity_scale_bench.py --incremental)."""
     from jobhouse_spark.operators.entity import (  # noqa: PLC0415
-        persist_entity_mapping,
-        release_persisted_entity_maps,
         resolve_entities,
         resolve_entities_incremental,
     )
 
     day1, batch = jh11_split_inputs(spark)
-    release_persisted_entity_maps()
-    stored = persist_entity_mapping(resolve_entities(day1))
+    stored = resolve_entities(day1)
     return resolve_entities_incremental(batch, stored).orderBy("name")
 
 
@@ -883,15 +858,12 @@ def jh12_indexed_incremental_resolution(
     tools/entity_scale_bench.py --incremental --indexed)."""
     from jobhouse_spark.operators.entity import (  # noqa: PLC0415
         build_entity_index,
-        persist_entity_mapping,
-        release_persisted_entity_maps,
         resolve_entities,
         resolve_entities_incremental_indexed,
     )
 
     day1, batch = jh11_split_inputs(spark)
-    release_persisted_entity_maps()
-    stored = persist_entity_mapping(resolve_entities(day1))
+    stored = resolve_entities(day1)
     index = build_entity_index(day1)
     mapping, _ = resolve_entities_incremental_indexed(batch, stored, index)
     return mapping.orderBy("name")

@@ -17,7 +17,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def local_cores() -> str:
+    """Core count for ``local[N]`` and the shuffle-partition hint:
+    ``$SPARK_GRAFT_CPUS`` when set, else this host's ``os.cpu_count()``."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
 
 
 def get_spark(
@@ -27,8 +31,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so tests and bench
-    share one code path; pass an explicit cluster master in production.
+    ``master`` defaults to ``local[N]`` with N from ``local_cores()``, the
+    same N as the shuffle-partition hint, so tests and bench share one
+    code path; pass an explicit cluster master in production.
 
     Multi-tenant sessions: pass
     ``extra_conf={"spark.scheduler.mode": "FAIR"}`` and have each query
@@ -40,7 +45,7 @@ def get_spark(
     concurrent queries). Scheduler mode is fixed at context start — it
     cannot be flipped on a live session.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -55,7 +60,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # starting hint only — AQE owns the real number at runtime
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
+        .config("spark.sql.shuffle.partitions", cpus)
         # -- Python boundary is always Arrow-batched, never per-row pickle
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode: the driver is the only JVM; give it the machine

@@ -29,15 +29,30 @@ def pytest_configure(config):
     )
 
 
+_CAMPAIGN_SKIP = "campaign test: set JH_FULL_TESTS=1 (or run tools/gate.sh)"
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("JH_FULL_TESTS"):
         return
-    skip = pytest.mark.skip(
-        reason="campaign test: set JH_FULL_TESTS=1 (or run tools/gate.sh)"
-    )
+    skip = pytest.mark.skip(reason=_CAMPAIGN_SKIP)
     for item in items:
         if "campaign" in item.keywords:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    if os.environ.get("JH_FULL_TESTS"):
+        return
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple) and _CAMPAIGN_SKIP in rep.longrepr[2]
+    )
+    terminalreporter.write_line(
+        f"{n} campaign tests skipped; run them with JH_FULL_TESTS=1 "
+        "(or tools/gate.sh)"
+    )
 
 SF_SMOKE = os.environ.get("JH_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("JH_ORACLE_SF_DIR", "/root/testdata/sf0.01")

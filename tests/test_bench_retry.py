@@ -159,7 +159,7 @@ def _wall_ratio(bench, walls):
         walls, bench._WALL_ANCHORS, "SPARK_GRAFT_WALL_ANCHOR_SCALE")
 
 
-def test_cpu_ratio_telltale_discriminates_measured_splits():
+def test_cpu_ratio_telltale_discriminates_measured_splits(monkeypatch, capsys):
     """Round-15 verdict task 2: load averages + spread missed the r14
     c8 interference wave (a 302.7 s attempt with g1=194 s self-reported
     contended:false and won the retry over a clean 25.9 s attempt).
@@ -174,9 +174,15 @@ def test_cpu_ratio_telltale_discriminates_measured_splits():
     assert _cpu_ratio(bench, poisoned) > bench._CPU_INFLATION_FLAG
     assert _cpu_ratio(bench, clean) <= bench._CPU_INFLATION_FLAG
     assert _cpu_ratio(bench, {}) is None  # non-headline tags
+    # a malformed scale degrades to 1.0 with a warning, never aborts
+    monkeypatch.delenv("SPARK_GRAFT_CPU_ANCHOR_SCALE", raising=False)
+    expected = _cpu_ratio(bench, clean)
+    monkeypatch.setenv("SPARK_GRAFT_CPU_ANCHOR_SCALE", "fast")
+    assert _cpu_ratio(bench, clean) == expected
+    assert "SPARK_GRAFT_CPU_ANCHOR_SCALE='fast'" in capsys.readouterr().err
 
 
-def test_wall_ratio_telltale_catches_cpu_flat_waves():
+def test_wall_ratio_telltale_catches_cpu_flat_waves(monkeypatch, capsys):
     """Some waves inflate walls 10-80x while leaving driver CPU nearly
     flat (round-15 measured run: o1 wall 18.2 s = 79x anchor, cpu only
     1.8x) — the wall basket must flag those. Poisoned walls below are
@@ -192,6 +198,12 @@ def test_wall_ratio_telltale_catches_cpu_flat_waves():
                 "j1_inner_equi": 0.7901, "l1_exact_dedup": 0.314}
     assert _wall_ratio(bench, poisoned) > bench._WALL_INFLATION_FLAG
     assert _wall_ratio(bench, clean_c8) <= bench._WALL_INFLATION_FLAG
+    monkeypatch.delenv("SPARK_GRAFT_WALL_ANCHOR_SCALE", raising=False)
+    expected = _wall_ratio(bench, poisoned)
+    for bad in ("", "2,5", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_WALL_ANCHOR_SCALE", bad)
+        assert _wall_ratio(bench, poisoned) == expected
+        assert "SPARK_GRAFT_WALL_ANCHOR_SCALE" in capsys.readouterr().err
 
 
 def test_cpu_inflated_attempt_triggers_retry(monkeypatch, capsys):

@@ -344,43 +344,6 @@ def test_jh10_dq_scorecard(spark):
     assert r.n_from_only + r.n_to_only + r.n_null_salary < 120
 
 
-def test_jh8_mapping_cache_lifecycle(spark):
-    """Round-12 verdict hygiene: jh8/jh9's entity mapping used a bare
-    .persist() with no matching release, accumulating one cached
-    relation per mart build in long-lived sessions. Now the mapping
-    goes through persist_entity_mapping + release-on-entry, so (a) the
-    session holds at most ONE live mapping cache across repeated
-    builds, (b) release_persisted_entity_maps() deterministically
-    drops it, and (c) because unpersist on a persisted frame is a
-    hint, the mart VALUES are identical whether the cache is live or
-    released (re-collect after release must match)."""
-    from jobhouse_spark.operators.entity import (
-        _PERSISTED_MAPPINGS,
-        release_persisted_entity_maps,
-    )
-    from jobhouse_spark.queries.jobhouse_gold import (
-        jh8_employer_resolution,
-        jh9_repost_audit,
-    )
-
-    release_persisted_entity_maps()  # clean slate
-
-    rows1 = jh8_employer_resolution(spark, "unused").collect()
-    assert len(_PERSISTED_MAPPINGS) == 1
-    # a second build (even of the OTHER mart) releases the first
-    # mapping on entry — accumulation is bounded at one
-    jh9_repost_audit(spark, "unused").collect()
-    assert len(_PERSISTED_MAPPINGS) == 1
-
-    df = jh8_employer_resolution(spark, "unused")  # not yet collected
-    assert release_persisted_entity_maps() == 1
-    assert not _PERSISTED_MAPPINGS
-    # the authoritative release check is semantic: the mart still
-    # computes correctly AFTER its cache was released (unpersist on a
-    # persisted frame is a hint -> lineage recompute, never corruption)
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, rows1))
-
-
 def test_incremental_resolution_bridges_clusters(spark):
     """The hard case (round-12 verdict task 2): a NEW name within
     max_dist of members of TWO existing clusters must merge them —

@@ -4,6 +4,7 @@ declared-but-not-hash-checked → planted-duplicate recall + error bounds).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from jobhouse_spark.operators.similarity import (
@@ -16,14 +17,19 @@ from jobhouse_spark.tables import Tables
 
 def test_minhash_recall_on_planted_duplicates(spark, sf_dir):
     """Plant 20 near-duplicates (one word changed) — MinHash must find
-    ≥90% of them and no exact-self pairs."""
+    ≥90% of them and no exact-self pairs, even when an id repeats (doc 5
+    twice: its copies share every bucket, but pairs are strict)."""
     docs = Tables(spark, sf_dir).documents.filter(F.col("doc_id") < 100)
     clones = docs.filter(F.col("doc_id") < 20).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" extraword")).alias("text"),
     )
-    corpus = docs.select("doc_id", "text").unionByName(clones)
+    dup_id = docs.filter(F.col("doc_id") == 5).select("doc_id", "text")
+    corpus = docs.select("doc_id", "text").unionByName(clones).unionByName(dup_id)
     pairs = minhash_near_duplicates(corpus, jaccard_threshold=0.7).collect()
+    assert all(r.doc_a < r.doc_b for r in pairs), [
+        r for r in pairs if r.doc_a >= r.doc_b
+    ]
     found = {(r.doc_a, r.doc_b) for r in pairs}
     planted = {(i, i + 100000) for i in range(20)}
     recall = len(found & planted) / len(planted)
@@ -150,18 +156,33 @@ def test_language_id_heuristic(spark):
         assert r.got == r.expected, (r.expected, r.got)
 
 
-def test_minhash_releases_cache(spark):
-    """ADVICE r4: minhash_near_duplicates persisted its feature relation
-    and never unpersisted — each call in a long-lived session (bench
-    repeats, library callers) accumulated another cached relation. The
-    operator must leave the catalog cache empty after returning."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "l2_minhash_neardup",
+        "jh8_employer_resolution",
+        "jh9_repost_audit",
+        "jh11_incremental_resolution",
+        "jh12_indexed_incremental_resolution",
+    ],
+)
+def test_minhash_releases_cache(spark, sf_dir, name):
+    """One lifecycle, no leaks: a registry build that caches a relation
+    it reuses releases it before returning, so repeated builds in a
+    long-lived session leave the catalog cache empty — and give the same
+    rows. getPersistentRDDs() is deliberately not checked:
+    localCheckpointed RDDs stay listed there until the JVM and Python
+    garbage collectors run, which is nondeterministic."""
+    from jobhouse_spark.queries import all_queries
+
+    q = all_queries()[name]
     spark.catalog.clearCache()  # isolate from other tests' cached relations
     jvm_catalog = spark._jsparkSession.sharedState().cacheManager()
-    rows = [(i, f"document number {i} with several shared words body") for i in range(50)]
-    docs = spark.createDataFrame(rows, "doc_id int, text string")
+    results = []
     for _ in range(2):
-        minhash_near_duplicates(docs, jaccard_threshold=0.5, num_hash_tables=3).count()
-    assert jvm_catalog.isEmpty(), "minhash leaked a persisted relation"
+        results.append(sorted(map(repr, q.fn(spark, sf_dir).collect())))
+        assert jvm_catalog.isEmpty(), f"{name} leaked a persisted relation"
+    assert results[0] == results[1] and results[0], name
 
 
 def test_incremental_minhash_equals_full_recompute(spark):
@@ -227,37 +248,6 @@ def test_incremental_minhash_resubmitted_id_batch_wins(spark):
     keys = [(r.doc_a, r.doc_b) for r in pairs]
     assert len(keys) == len(set(keys)), f"duplicate pairs: {keys}"
     assert (5, 9) in keys, keys  # matched via the NEW text, not the stale index row
-
-
-def test_minhash_materialize_modes_agree(spark):
-    """The three featured-relation lifecycles (eager checkpoint /
-    caller-owned persist / pure-lazy recompute) are plumbing, not
-    semantics: identical pair sets. 'persist' hands the cache back via
-    jh_cached_inputs (caller releases — no catalog leak afterward);
-    'lazy' leaves no session state at all."""
-    spark.catalog.clearCache()
-    jvm_catalog = spark._jsparkSession.sharedState().cacheManager()
-    rows = [(i, f"document number {i % 20} with several shared words body") for i in range(60)]
-    docs = spark.createDataFrame(rows, "doc_id int, text string")
-
-    def run(**kw):
-        df = minhash_near_duplicates(docs, jaccard_threshold=0.5, num_hash_tables=3, **kw)
-        got = sorted(map(tuple, df.collect()))
-        return df, got
-
-    _, ckpt = run(materialize="checkpoint")
-    lazy_df, lazy = run(materialize="lazy")
-    assert not hasattr(lazy_df, "jh_cached_inputs")
-    pers_df, pers = run(materialize="persist")
-    for cached in pers_df.jh_cached_inputs:
-        cached.unpersist()
-    assert ckpt == lazy == pers
-    assert jvm_catalog.isEmpty(), "persist handle release left a cached relation"
-
-    import pytest
-
-    with pytest.raises(ValueError, match="materialize"):
-        minhash_near_duplicates(docs, materialize="bogus")
 
 
 def test_ngram_jaccard_max_df_bounds_hot_shingle_fanout(spark):
@@ -369,8 +359,6 @@ def test_semantic_dedup_rejects_non_positive_threshold(spark):
     """tau = 0 ('any non-negative cosine') is unrepresentable: the
     dot > 0 pre-filter would silently drop the cos = 0 boundary, so the
     op must refuse at entry instead of returning wrong results."""
-    import pytest
-
     from jobhouse_spark.operators.ann import ivf_fixed_centroids, semantic_dedup
 
     emb = spark.createDataFrame(
@@ -393,8 +381,6 @@ def test_semantic_dedup_collapsed_matches_direct(spark):
     reproduce direct pair verdicts), a NULL embedding pair (NULL cell,
     false, survives the null-safe join), and a singleton."""
     import random
-
-    import pytest
 
     from jobhouse_spark.operators.ann import (
         ivf_fixed_centroids,
