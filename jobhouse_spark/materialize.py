@@ -5,10 +5,11 @@ module-level registries of persisted frames):
 
 1. An eager barrier is ``materialize_barrier`` (below). Callers: the
    bronze quarantine split (``sources/bronze.py``), the incremental
-   merge's write barrier (``operators/incremental.py``), minhash's
-   output pairs and ``minhash_incremental_pairs``, the n-gram Jaccard
+   merge's write barrier (``operators/incremental.py``), the output
+   pairs of the MinHash pair tail that ``minhash_near_duplicates`` and
+   ``minhash_incremental_pairs`` share, the n-gram Jaccard
    hot-shingle pruning (``operators/similarity.py``), the incremental
-   entity resolvers' verified edges (``operators/entity.py``),
+   entity resolver's verified edges (``operators/entity.py``),
    ``semantic_dedup``, ``semantic_dedup_collapsed`` and
    ``kmeans_refine`` (``operators/ann.py``), and ``hash_ranked`` /
    ``mixture_select_budget`` (``operators/mixture.py``).

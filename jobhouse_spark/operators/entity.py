@@ -113,6 +113,34 @@ def _deletion_keys(name_col: str, max_dist: int) -> Column:
     return F.expr(cur)
 
 
+def _long_gram_rows(nodes: DataFrame, gram_len: int, max_dist: int) -> DataFrame:
+    """Long-stratum gram postings (name, gram) for the q-gram filter."""
+    short_bound = gram_len * (max_dist + 1)
+    return nodes.filter(F.length("name") >= short_bound).select(
+        "name", F.explode(_grams("name", gram_len)).alias("gram")
+    )
+
+
+def _delkey_rows(nodes: DataFrame, gram_len: int, max_dist: int) -> DataFrame:
+    """Short-stratum SymSpell deletion keys (name, k). The stratum
+    extends max_dist past the gram bound so a pair that STRADDLES the
+    boundary (|len delta| <= max_dist) is generated by the deletion
+    keys."""
+    short_bound = gram_len * (max_dist + 1)
+    return nodes.filter(F.length("name") < short_bound + max_dist).select(
+        "name", F.explode(_deletion_keys("name", max_dist)).alias("k")
+    )
+
+
+def _normalized_nodes(names: DataFrame, name_col: str) -> DataFrame:
+    """The resolvers' node set: distinct, non-empty normalized names."""
+    return (
+        names.select(normalize_entity_name(F.col(name_col)).alias("name"))
+        .filter(F.col("name") != "")
+        .distinct()
+    )
+
+
 def resolve_entities(
     names: DataFrame,
     name_col: str = "name",
@@ -162,19 +190,11 @@ def resolve_entities(
     prefix-bucket size max/p99). Counting forces extra jobs — bench
     instrumentation only, leave None in production pipelines.
     """
-    short_bound = gram_len * (max_dist + 1)  # gram guarantee needs len >= this
     prefix_len = gram_len * max_dist + 1
 
-    nodes = (
-        names.select(normalize_entity_name(F.col(name_col)).alias("name"))
-        .filter(F.col("name") != "")
-        .distinct()
-    )
+    nodes = _normalized_nodes(names, name_col)
 
-    long_names = nodes.filter(F.length("name") >= short_bound)
-    ng = long_names.select(
-        "name", F.explode(_grams("name", gram_len)).alias("gram")
-    )
+    ng = _long_gram_rows(nodes, gram_len, max_dist)
     gram_df = ng.groupBy("gram").agg(F.count("*").alias("df"))
     w = Window.partitionBy("name").orderBy(F.asc("df"), F.asc("gram"))
     prefix = (
@@ -195,14 +215,9 @@ def resolve_entities(
         .distinct()
     )
 
-    # the short stratum extends max_dist past the bound so a pair that
-    # STRADDLES the boundary (|len delta| <= max_dist) is generated by
-    # the deletion keys; straddle-band pairs may also appear from the
-    # prefix join — connected_components dedupes edges
-    short_names = nodes.filter(F.length("name") < short_bound + max_dist)
-    sk = short_names.select(
-        "name", F.explode(_deletion_keys("name", max_dist)).alias("k")
-    )
+    # straddle-band pairs may come from both strata —
+    # connected_components dedupes edges
+    sk = _delkey_rows(nodes, gram_len, max_dist)
     sa = sk.alias("a")
     sb = sk.alias("b")
     cand_short = (
@@ -226,8 +241,9 @@ def resolve_entities(
         )
         stats_out.update(
             nodes=nodes.count(),
-            long_names=long_names.count(),
-            short_names=short_names.count(),
+            # every long name has a gram, every short one a deletion key
+            long_names=ng.select("name").distinct().count(),
+            short_names=sk.select("name").distinct().count(),
             cand_long=cand_long.count(),
             cand_short=cand_short.count(),
             prefix_bucket_max=int(bucket.mx) if bucket.mx is not None else 0,
@@ -265,80 +281,6 @@ def resolve_entities(
 # ---------------------------------------------------------------------------
 
 
-def _incremental_candidate_edges(
-    new_nodes: DataFrame,
-    union_nodes: DataFrame,
-    gram_len: int,
-    max_dist: int,
-) -> DataFrame:
-    """Verified batch-adjacent edges for incremental resolution:
-    one-sided prefix filter (long stratum) + deletion keys (short
-    stratum), levenshtein-verified. Extracted as a module-level helper
-    so tools/explain_audit.py can assert the STRUCTURAL batch-sizedness
-    property on the exact plan the resolver executes (the closure's
-    eager localCheckpoint truncates this lineage out of the final
-    mapping's plan): exactly one prefix-rank Window (only the NEW side
-    is prefix-filtered — a second window or a windowed self-join would
-    mean domain-wide prefix work), no CartesianProduct/BNLJ, no Python
-    eval. Called only by resolve_entities_incremental."""
-    short_bound = gram_len * (max_dist + 1)
-    prefix_len = gram_len * max_dist + 1
-
-    # ---- long stratum: one-sided prefix filter ----
-    union_long_grams = (
-        union_nodes.filter(F.length("name") >= short_bound)
-        .select("name", F.explode(_grams("name", gram_len)).alias("gram"))
-    )
-    gram_df = union_long_grams.groupBy("gram").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("name").orderBy(F.asc("df"), F.asc("gram"))
-    new_prefix = (
-        new_nodes.filter(F.length("name") >= short_bound)
-        .select("name", F.explode(_grams("name", gram_len)).alias("gram"))
-        .join(gram_df, "gram")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= prefix_len)
-        .select("name", "gram")
-    )
-    a = new_prefix.alias("a")
-    b = union_long_grams.alias("b")
-    cand_long = (
-        a.join(b, "gram")
-        .filter(F.col("a.name") != F.col("b.name"))
-        .filter(
-            F.abs(F.length(F.col("a.name")) - F.length(F.col("b.name"))) <= max_dist
-        )
-        .select(
-            F.least(F.col("a.name"), F.col("b.name")).alias("src"),
-            F.greatest(F.col("a.name"), F.col("b.name")).alias("dst"),
-        )
-        .distinct()
-    )
-
-    # ---- short stratum: deletion keys, batch side vs union side ----
-    shortish = F.length("name") < short_bound + max_dist
-    new_sk = new_nodes.filter(shortish).select(
-        "name", F.explode(_deletion_keys("name", max_dist)).alias("k")
-    )
-    union_sk = union_nodes.filter(shortish).select(
-        "name", F.explode(_deletion_keys("name", max_dist)).alias("k")
-    )
-    sa = new_sk.alias("a")
-    sb = union_sk.alias("b")
-    cand_short = (
-        sa.join(sb, "k")
-        .filter(F.col("a.name") != F.col("b.name"))
-        .select(
-            F.least(F.col("a.name"), F.col("b.name")).alias("src"),
-            F.greatest(F.col("a.name"), F.col("b.name")).alias("dst"),
-        )
-        .distinct()
-    )
-
-    return cand_long.unionAll(cand_short).filter(
-        F.levenshtein("src", "dst") <= max_dist
-    )
-
-
 def resolve_entities_incremental(
     batch_names: DataFrame,
     stored_mapping: DataFrame,
@@ -372,8 +314,9 @@ def resolve_entities_incremental(
       missing from b's FULL gram set. Joining prefix(new) against the
       full gram postings of (old UNION new) therefore generates every
       true pair involving a new name, for ANY prefix ordering — the
-      ordering is only a bucket-size knob (df-ascending over the union
-      keeps heavy grams out of prefixes, same as the batch resolver).
+      ordering is only a bucket-size knob (df-ascending over the stored
+      names keeps heavy grams out of prefixes, same as the batch
+      resolver).
     - OLD-OLD pairs need not be considered: the stored mapping is
       exact, so two old names in different clusters are > max_dist
       apart — no new old-old edge can exist, and old-old edges inside
@@ -387,43 +330,43 @@ def resolve_entities_incremental(
       canonical IS the minimum of its cluster — so canonical election
       matches the full re-resolve exactly.
 
-    Marginal cost: one map pass over the stored names (gram postings /
-    deletion keys — no pairwise work), a gram-df aggregation, and a
-    join whose left side is batch-sized; verify + closure touch only
+    Marginal cost: this is :func:`resolve_entities_incremental_indexed`
+    over a gram index derived from the stored names on the spot — one
+    map pass over them (gram postings / deletion keys — no pairwise
+    work) and a gram-df aggregation — then candidate joins whose
+    broadcast side is the batch; verify + closure touch only
     batch-adjacent pairs. The full rebuild's domain-wide candidate
     join, verify, and iterative closure are all avoided
-    (tools/entity_scale_bench.py --incremental measures the ratio).
+    (tools/entity_scale_bench.py --incremental measures the ratio). A
+    recurring daily apply keeps the index in tables instead
+    (``build_entity_index`` once, then the indexed resolver), which
+    drops the O(domain) derivation as well.
 
     ``stored_mapping``: (name, canonical) as produced by
     ``resolve_entities`` — names already normalized. ``batch_names``
     may be raw (they are normalized here) and may repeat stored names
-    (dropped — already resolved).
+    (dropped — already resolved). Precondition, inherited from the
+    indexed resolver: ``batch_names`` is a daily delta (broadcast-sized,
+    its prefix grams and deletion keys are broadcast into the candidate
+    joins); for a domain-sized batch use resolve_entities.
 
     Chained (day-after-day) application: truncate the returned
     mapping's lineage between applications (write it to a table, or
     ``localCheckpoint``) — this function references ``stored_mapping``
-    four times, so feeding day k's un-truncated output in as day k+1's
-    stored map grows the analyzed logical plan ~4x per day and
+    several times, so feeding day k's un-truncated output in as day k+1's
+    stored map grows the analyzed logical plan several-fold per day and
     plan-analysis time comes to dominate (measured: per-step walls
     rose 56.6->98.7 s over 5 chained days at 1M entities while batch
     sizes SHRANK; flat once checkpointed — ENTITY_INC.json). In
     production the stored map lives in a parquet table between days,
     which truncates lineage for free.
     """
-    old_nodes = stored_mapping.select(F.col("name"))
-    new_nodes = (
-        batch_names.select(normalize_entity_name(F.col(name_col)).alias("name"))
-        .filter(F.col("name") != "")
-        .distinct()
-        .join(old_nodes, "name", "left_anti")
-    )
-    union_nodes = old_nodes.unionByName(new_nodes)
-    edges_new = _incremental_candidate_edges(
-        new_nodes, union_nodes, gram_len, max_dist
-    )
-    return _apply_verified_edges(
-        new_nodes, edges_new, stored_mapping, stats_out, max_iterations
-    )
+    # the stored names are already normalized: index them as they are
+    # (build_entity_index would normalize them a second time)
+    index = _gram_index(stored_mapping.select("name"), gram_len, max_dist)
+    return resolve_entities_incremental_indexed(
+        batch_names, stored_mapping, index, max_iterations, name_col, stats_out
+    )[0]
 
 
 def _apply_verified_edges(
@@ -433,7 +376,7 @@ def _apply_verified_edges(
     stats_out: dict | None,
     max_iterations: int,
 ) -> DataFrame:
-    """Shared tail of the two incremental resolvers: contract old
+    """Tail of the incremental resolver: contract old
     endpoints to their stored canonicals, run the closure over the
     touched subgraph, relabel merged clusters. Exactness argument in
     resolve_entities_incremental's docstring.
@@ -536,34 +479,18 @@ def _apply_verified_edges(
 # ---------------------------------------------------------------------------
 
 
-def _long_gram_rows(nodes: DataFrame, gram_len: int, max_dist: int) -> DataFrame:
-    """Long-stratum gram postings (name, gram) for the q-gram filter."""
-    short_bound = gram_len * (max_dist + 1)
-    return nodes.filter(F.length("name") >= short_bound).select(
-        "name", F.explode(_grams("name", gram_len)).alias("gram")
-    )
-
-
-def _delkey_rows(nodes: DataFrame, gram_len: int, max_dist: int) -> DataFrame:
-    """Short-stratum SymSpell deletion keys (name, k)."""
-    short_bound = gram_len * (max_dist + 1)
-    return nodes.filter(F.length("name") < short_bound + max_dist).select(
-        "name", F.explode(_deletion_keys("name", max_dist)).alias("k")
-    )
-
-
 class EntityGramIndex:
     """Persistable blocking-index state for
     :func:`resolve_entities_incremental_indexed`.
 
-    ``resolve_entities_incremental`` is exact but re-derives the
-    stored side's gram postings, deletion keys, and gram-df aggregate
-    from scratch on EVERY batch — an O(stored-domain) explode +
-    aggregate that dominates the daily wall once the domain is large
-    (measured at 1M entities: ~42 s/day of which the batch-adjacent
-    work is a fraction — ENTITY_INC.json). This class stores those
-    three derivations as data so a daily apply pays O(batch) to
-    update them instead of O(domain) to recompute them:
+    Deriving the stored side's gram postings, deletion keys, and
+    gram-df aggregate from the stored names on EVERY batch (what
+    ``resolve_entities_incremental`` does) is an O(stored-domain)
+    explode + aggregate that dominates the daily wall once the domain
+    is large (measured at 1M entities: ~42 s/day of which the
+    batch-adjacent work is a fraction — ENTITY_INC.json). This class
+    stores those three derivations as data so a daily apply pays
+    O(batch) to update them instead of O(domain) to recompute them:
 
     - ``postings`` (gram, name): long-stratum q-gram postings,
     - ``delkeys`` (k, name): short-stratum deletion-neighborhood keys,
@@ -591,7 +518,7 @@ class EntityGramIndex:
         delkeys: DataFrame,
         gram_df: DataFrame,
         gram_len: int = 4,
-        max_dist: int = 1,
+        max_dist: int = 2,
     ) -> None:
         self.postings = postings
         self.delkeys = delkeys
@@ -655,18 +582,20 @@ class EntityGramIndex:
 def build_entity_index(
     names: DataFrame,
     gram_len: int = 4,
-    max_dist: int = 1,
+    max_dist: int = 2,
     name_col: str = "name",
 ) -> EntityGramIndex:
-    """Build the blocking index over a name domain (normally the
-    stored mapping's names — already normalized; normalization here is
-    idempotent). One O(domain) pass, paid once at bootstrap instead of
-    once per day."""
-    nodes = (
-        names.select(normalize_entity_name(F.col(name_col)).alias("name"))
-        .filter(F.col("name") != "")
-        .distinct()
-    )
+    """Build the blocking index over a raw name domain (normally the
+    names the stored mapping was resolved from; they are normalized
+    here). One O(domain) pass, paid once at bootstrap instead of once
+    per day. Normalization strips one legal suffix per pass, so it is
+    not idempotent: the stored form "acme llc" of "Acme LLC LLC" would
+    be indexed as "acme"."""
+    return _gram_index(_normalized_nodes(names, name_col), gram_len, max_dist)
+
+
+def _gram_index(nodes: DataFrame, gram_len: int, max_dist: int) -> EntityGramIndex:
+    """EntityGramIndex over already-normalized distinct names."""
     postings = _long_gram_rows(nodes, gram_len, max_dist)
     return EntityGramIndex(
         postings,
@@ -685,11 +614,12 @@ def resolve_entities_incremental_indexed(
     name_col: str = "name",
     stats_out: dict | None = None,
 ) -> tuple[DataFrame, EntityGramIndex]:
-    """:func:`resolve_entities_incremental` with the stored side's
-    derivations read from an :class:`EntityGramIndex` instead of
-    recomputed — the daily marginal becomes O(batch) + one streamed
-    pass over the stored postings (no domain explode, no domain
-    gram-df aggregate, no domain window).
+    """Incremental resolution (exactness argument in
+    :func:`resolve_entities_incremental`, which calls this with an
+    index derived on the spot) with the stored side's derivations read
+    from an :class:`EntityGramIndex` — the daily marginal becomes
+    O(batch) + one streamed pass over the stored postings (no domain
+    explode, no domain gram-df aggregate, no domain window).
 
     Returns ``(mapping, updated_index)`` — the index covering the
     union domain, ready for the next day (stale df; see
@@ -697,16 +627,19 @@ def resolve_entities_incremental_indexed(
     (write to tables / localCheckpoint — see the lineage note in
     resolve_entities_incremental).
 
-    Exactness: identical output to resolve_entities_incremental and to
-    a full re-resolve of the union. The only degree of freedom the
-    index introduces is WHICH q*t+1 grams form each new name's probe
-    prefix (ranked by the stale df snapshot, unseen grams ranked
-    rarest at df=0) — and the one-sided prefix theorem guarantees
-    every true match is found under ANY prefix choice; the levenshtein
-    verify then makes the edge set equal to the set of true
-    batch-adjacent pairs regardless of candidate-set differences.
-    Pinned by tests/test_entity_index.py (indexed == plain == rebuild,
-    chained, and through a parquet round-trip).
+    Exactness: identical output to a full re-resolve of the union, for
+    any index covering the stored names and built with the
+    ``max_dist`` the stored mapping was resolved with (the index's
+    ``max_dist`` is the edit distance this apply verifies at). The
+    only degree of freedom the index introduces is WHICH q*t+1 grams
+    form each new name's probe prefix (ranked by the stale df
+    snapshot, unseen grams ranked rarest at df=0) — and the one-sided
+    prefix theorem guarantees every true match is found under ANY
+    prefix choice; the levenshtein verify then makes the edge set
+    equal to the set of true batch-adjacent pairs regardless of
+    candidate-set differences.
+    Pinned by tests/test_entity_index.py (stored index == index derived
+    on the spot == rebuild, chained, and through a parquet round-trip).
 
     Plan shape (the 100 TB contract, asserted by tools/explain_audit.py):
     the batch side is explicitly broadcast into both candidate joins,
@@ -717,12 +650,8 @@ def resolve_entities_incremental_indexed(
     is a daily delta (broadcast-sized); for a domain-sized batch use
     resolve_entities.
     """
-    old_nodes = stored_mapping.select(F.col("name"))
-    new_nodes = (
-        batch_names.select(normalize_entity_name(F.col(name_col)).alias("name"))
-        .filter(F.col("name") != "")
-        .distinct()
-        .join(old_nodes, "name", "left_anti")
+    new_nodes = _normalized_nodes(batch_names, name_col).join(
+        stored_mapping.select("name"), "name", "left_anti"
     )
     edges_new = _indexed_candidate_edges(new_nodes, index)
     mapping = _apply_verified_edges(
@@ -735,9 +664,9 @@ def _indexed_candidate_edges(
     new_nodes: DataFrame, index: EntityGramIndex
 ) -> DataFrame:
     """Verified batch-adjacent edges probed against the STORED index.
-    Module-level (like _incremental_candidate_edges) so
-    tools/explain_audit.py can assert the structural contract on the
-    exact plan the resolver executes when the index is parquet-backed:
+    Module-level so tools/explain_audit.py can assert the structural
+    contract on the exact plan the resolver executes (jh11 with an
+    index derived in memory, jh12 with a parquet-backed one):
     the stored derivations are SCANNED (no domain explode / aggregate
     / window in the plan), the batch side is broadcast into both
     candidate joins (BroadcastHashJoin — the stored postings/delkeys

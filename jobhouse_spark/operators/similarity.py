@@ -373,35 +373,75 @@ def _band_signatures(featured: DataFrame, seed: int, num_hash_tables: int) -> Da
     return featured.select("doc", F.posexplode(sigs).alias("band_idx", "sig"))
 
 
-def _capped_buckets(banded: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Per-bucket membership cap: a (band, signature) bucket admits at
-    most max_bucket_size docs (lowest ids — deterministic), bounding its
-    pair fan-out to C(cap, 2) instead of C(bucket, 2)."""
-    wb = Window.partitionBy("band_idx", "sig").orderBy(F.col("doc").asc())
-    return (
-        banded.withColumn("__bn", F.row_number().over(wb))
-        .filter(F.col("__bn") <= max_bucket_size)
-        .drop("__bn")
-    )
-
-
-def _exact_jaccard_pairs(
-    cand: DataFrame, features: DataFrame, jaccard_threshold: float
+def _minhash_pairs(
+    signatures: DataFrame,
+    features: DataFrame,
+    jaccard_threshold: float,
+    max_bucket_size: int,
 ) -> DataFrame:
-    """Final stage: exact Jaccard on surviving candidate pairs only —
-    two equi-joins pulling feature sets back onto the pair list. No
-    broadcast hint on purpose — the candidate side is bucket-cap-bounded
-    per bucket but NOT globally small (a duplicate-heavy corpus yields
-    C(cap,2) pairs per saturated bucket x bands; measured multi-GB at
-    10x replication, where a forced broadcast OOMs a small driver). AQE
-    converts to broadcast at runtime when the pair set is actually tiny."""
+    """The one MinHash candidate-pair path, shared by
+    minhash_near_duplicates and minhash_incremental_pairs:
+    ``signatures`` (doc, band_idx, sig, is_new) → capped buckets →
+    in-row pairs with at least one new side → exact Jaccard against
+    ``features`` (doc, features) → ``materialize_barrier``. Returns
+    (doc_a, doc_b, jaccard_dist), doc_a < doc_b."""
+    from jobhouse_spark.materialize import materialize_barrier  # noqa: PLC0415
+
+    # Per-bucket membership cap: a (band, signature) bucket admits at
+    # most max_bucket_size docs (lowest ids — deterministic), bounding
+    # its pair fan-out to C(cap, 2) instead of C(bucket, 2). The
+    # spill-safe window stays in front of the collect below, so a
+    # degenerate bucket still sorts/spills gracefully and the
+    # collect_list buffer is bounded by the cap, never by the bucket.
+    wb = Window.partitionBy("band_idx", "sig").orderBy(F.col("doc").asc())
+    capped = (
+        signatures.withColumn("__bn", F.row_number().over(wb))
+        .filter(F.col("__bn") <= max_bucket_size)
+    )
+    # In-row pair generation (round 15): a self-join of
+    # `capped` on (band_idx, sig) re-executes the whole window-cap
+    # pipeline for BOTH join sides. Collecting each bucket's membership
+    # once and expanding the C(members, 2) pairs with array transforms
+    # yields the IDENTICAL pair set — members sorted ascending, x paired
+    # with every later y > x, so doc_a < doc_b even when an id repeats —
+    # from ONE pass, and the groupBy reuses the window's (band_idx, sig)
+    # hash partitioning (no new exchange). A pair of two old docs was
+    # found when the index was built; recomputing it is the waste the
+    # incremental path exists to avoid, so it is dropped here.
+    members = capped.groupBy("band_idx", "sig").agg(
+        F.sort_array(F.collect_list(F.struct("doc", "is_new"))).alias("ms")
+    )
+    cand = (
+        members.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ms, (x, i) -> "
+                    "transform(filter(slice(ms, i + 2, size(ms)), "
+                    "y -> y.doc > x.doc AND (x.is_new OR y.is_new)), "
+                    "y -> struct(x.doc AS doc_a, y.doc AS doc_b))))"
+                )
+            ).alias("p")
+        )
+        .select("p.doc_a", "p.doc_b")
+        .distinct()
+    )
+    # Exact Jaccard on surviving candidate pairs only — two equi-joins
+    # pulling feature sets back onto the pair list. No broadcast hint on
+    # purpose: the candidate side is bucket-cap-bounded per bucket but
+    # NOT globally small (a duplicate-heavy corpus yields C(cap,2) pairs
+    # per saturated bucket x bands; measured multi-GB at 10x
+    # replication, where a forced broadcast OOMs a small driver). AQE
+    # converts to broadcast at runtime when the pair set is actually tiny.
     fa = features.select(F.col("doc").alias("doc_a"), F.col("features").alias("fa"))
     fb = features.select(F.col("doc").alias("doc_b"), F.col("features").alias("fb"))
     # filter on similarity directly (inclusive boundary: sim >= threshold
     # keeps the pair) instead of a derived 1-x distance comparison whose
     # rounding can flip exact-boundary pairs
     sim = F.size(F.array_intersect("fa", "fb")) / F.size(F.array_union("fa", "fb"))
-    return (
+    # The barrier truncates lineage, so the callers' persisted feature
+    # relations can be released on return; what it keeps is the OUTPUT
+    # pair list.
+    return materialize_barrier(
         cand.join(fa, "doc_a")
         .join(fb, "doc_b")
         .withColumn("__sim", sim)
@@ -463,8 +503,11 @@ def minhash_incremental_pairs(
     re-featurizing the corpus).
 
     Returns (doc_a, doc_b, jaccard_dist), doc_a < doc_b; new-vs-index
-    and new-vs-new pairs both included. Eagerly materialized
-    (materialize_barrier) so the batch featurization runs once.
+    and new-vs-new pairs both included. The index and batch signatures,
+    tagged old/new, go through the same pair tail as
+    minhash_near_duplicates (``_minhash_pairs``: one capped-bucket pass,
+    in-row pairs with at least one new side), which ends in a
+    materialize_barrier so the batch featurization runs once.
     """
     new_feat = _minhash_featurize(
         new_docs, id_col, text_col, shingle_n, num_features, feature_hash
@@ -482,30 +525,9 @@ def minhash_incremental_pairs(
     all_sigs = index_signatures.select("doc", "band_idx", "sig").withColumn(
         "is_new", F.lit(False)
     ).unionByName(new_sigs.withColumn("is_new", F.lit(True)))
-    capped = _capped_buckets(all_sigs, max_bucket_size)
-    a = capped.alias("a")
-    b = capped.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        # at least one NEW side: index-vs-index pairs were already found
-        # when the index was built — recomputing them is the waste this
-        # operator exists to avoid
-        .filter(F.col("a.is_new") | F.col("b.is_new"))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
     all_feat = index_features.select("doc", "features").unionByName(new_feat)
-    from jobhouse_spark.materialize import materialize_barrier  # noqa: PLC0415
-
     try:
-        return materialize_barrier(
-            _exact_jaccard_pairs(cand, all_feat, jaccard_threshold)
-        )
+        return _minhash_pairs(all_sigs, all_feat, jaccard_threshold, max_bucket_size)
     finally:
         new_feat.unpersist()
 
@@ -525,9 +547,9 @@ def minhash_near_duplicates(
     """MinHash-LSH near-duplicate pairs over word-shingle sets.
 
     Pipeline: tokenize → n-gram shingles → hash to a binary feature set
-    (set semantics) → per-band minhash signature → **explicit band-bucket
-    equi-join** with a **per-bucket membership cap** → exact Jaccard on
-    the surviving pairs. Returns (doc_a, doc_b, jaccard_dist),
+    (set semantics) → per-band minhash signature → **per-bucket
+    membership cap** → in-row pair expansion of each capped band bucket
+    → exact Jaccard on the surviving pairs. Returns (doc_a, doc_b, jaccard_dist),
     doc_a < doc_b. Entirely native DataFrame ops (whole-stage codegen);
     the minhash permutations are ``pmod(a*f + b, p)`` expressions over
     the feature array, the same universal hash family pyspark.ml's
@@ -564,59 +586,26 @@ def minhash_near_duplicates(
     (doc_a < doc_b), so an id is never paired with itself.
 
     Eager: ``featured`` (consumed three times: signatures + both sides of
-    the exact-Jaccard rejoin) is persisted, the pipeline runs to a
-    ``materialize_barrier`` over the small threshold-filtered pair list,
-    and ``featured`` is released before returning. Leak-free in a
-    long-lived session with no caller obligations; the fault-tolerance
-    trade is the barrier's (see ``jobhouse_spark.materialize``).
+    the exact-Jaccard rejoin) is persisted, every signature is tagged new
+    and handed to the pair tail minhash_incremental_pairs also runs
+    (``_minhash_pairs``), which ends in a ``materialize_barrier`` over
+    the small threshold-filtered pair list, and ``featured`` is released
+    before returning. Leak-free in a long-lived session with no caller
+    obligations; the fault-tolerance trade is the barrier's (see
+    ``jobhouse_spark.materialize``).
     """
-    from jobhouse_spark.materialize import materialize_barrier  # noqa: PLC0415
-
     # persist so the tokenize/shingle/hash chain runs one corpus scan,
     # not three. The cached relation is one int-array column — far
     # smaller than the text — and spills to disk if not.
     featured = _minhash_featurize(
         docs, id_col, text_col, shingle_n, num_features, feature_hash
     ).persist()
-    banded = _band_signatures(featured, seed, num_hash_tables)
-    capped = _capped_buckets(banded, max_bucket_size)
-    # In-row pair generation over the CAPPED buckets (round 15, guide
-    # §2.3/§2.4): the r14 shape self-joined `capped` with itself on
-    # (band_idx, sig), which re-executed the whole banded->window cap
-    # pipeline for BOTH join sides — a second full exchange + sort +
-    # window over 3x-doc-cardinality signature rows (featured is
-    # persisted, capped is not). Collecting each bucket's (already
-    # cap-bounded, <= max_bucket_size) membership once and expanding
-    # the C(members, 2) pairs with array transforms yields the
-    # IDENTICAL pair set — members sorted ascending, x paired with
-    # every later y > x, so doc_a < doc_b even when an id repeats (the
-    # self-join's a.doc < b.doc) — from ONE pass, and the
-    # groupBy reuses the window's (band_idx, sig) hash partitioning
-    # (no new exchange). The spill-safe window cap stays in front, so
-    # a degenerate bucket still sorts/spills gracefully and the
-    # collect_list buffer is bounded by the cap, never by the bucket.
-    members = capped.groupBy("band_idx", "sig").agg(
-        F.sort_array(F.collect_list("doc")).alias("ms")
-    )
-    cand = (
-        members.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ms, (x, i) -> "
-                    "transform(filter(slice(ms, i + 2, size(ms)), y -> y > x), "
-                    "y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
+    # every doc is new: the shared pair tail keeps all pairs
+    banded = _band_signatures(featured, seed, num_hash_tables).withColumn(
+        "is_new", F.lit(True)
     )
     try:
-        # The barrier truncates lineage, so the released `featured` is
-        # never recomputed; what it keeps is the OUTPUT pair list.
-        return materialize_barrier(
-            _exact_jaccard_pairs(cand, featured, jaccard_threshold)
-        )
+        return _minhash_pairs(banded, featured, jaccard_threshold, max_bucket_size)
     finally:
         featured.unpersist()
 

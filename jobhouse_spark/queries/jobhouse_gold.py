@@ -808,18 +808,22 @@ def jh11_incremental_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JH11: the production daily-ingest shape for entity resolution —
     resolve day-1's employer names fully (the stored canonical map),
     then apply day-2's batch INCREMENTALLY
-    (operators/entity.resolve_entities_incremental): candidate pairs
-    only for batch-adjacent names (one-sided prefix filter against the
-    union gram postings), stored clusters contracted to their
-    canonicals, closure over the touched subgraph only. The split is
+    (operators/entity.resolve_entities_incremental): a gram index is
+    derived from the stored names in memory and probed exactly as
+    jh12 probes its stored one — candidate pairs only for
+    batch-adjacent names (the batch's one-sided prefix grams broadcast
+    against the stored postings plus the batch's own grams), stored
+    clusters contracted to their canonicals, closure over the touched
+    subgraph only. The split is
     deterministic (posting id % 3), and it genuinely exercises the
     merge path: for some entities day-1 holds only the two typo forms
     (edit distance 3 apart -> two stored clusters) and day-2's base
     form bridges them, relabeling both stored clusters.
 
     100 TB shape: the stored side contributes one map-only pass (gram
-    postings / deletion keys) and a gram-df aggregation; pairwise work
-    and closure are batch-sized, so a daily batch costs the day's
+    postings / deletion keys) and a gram-df aggregation — the work jh12
+    keeps in tables instead; pairwise work and closure are
+    batch-sized, so a daily batch costs the day's
     delta, not a domain rebuild (measured:
     tools/entity_scale_bench.py --incremental)."""
     from jobhouse_spark.operators.entity import (  # noqa: PLC0415

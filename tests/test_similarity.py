@@ -160,6 +160,7 @@ def test_language_id_heuristic(spark):
     "name",
     [
         "l2_minhash_neardup",
+        "l2e_incremental_minhash",
         "jh8_employer_resolution",
         "jh9_repost_audit",
         "jh11_incremental_resolution",
@@ -221,6 +222,37 @@ def test_incremental_minhash_equals_full_recompute(spark):
     # the cross-boundary planted dups were actually found
     found = {(a, b) for a, b, _ in got}
     assert (3, 100) in found and (7, 101) in found, found
+
+
+def test_incremental_minhash_caps_buckets_once(spark, monkeypatch):
+    """The bucket-cap window runs once: the plan handed to the barrier
+    has exactly one Window node (a self-join of the capped buckets
+    plans the window pipeline once per join side)."""
+    import re
+
+    import jobhouse_spark.materialize as materialize
+    from jobhouse_spark.operators.similarity import (
+        minhash_incremental_pairs,
+        minhash_index,
+    )
+
+    captured = []
+    monkeypatch.setattr(
+        materialize, "materialize_barrier", lambda df: captured.append(df) or df
+    )
+    docs = spark.createDataFrame(
+        [(i, f"document {i} the quick brown fox jumps") for i in range(6)],
+        "doc_id int, text string",
+    )
+    sigs, feats = minhash_index(docs.filter("doc_id < 4"), num_hash_tables=3)
+    minhash_incremental_pairs(
+        docs.filter("doc_id >= 4"), sigs, feats, num_hash_tables=3
+    )
+    (pre_barrier,) = captured
+    plan = pre_barrier._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert len(re.findall(r"^\(\d+\) Window$", plan, re.M)) == 1, plan
 
 
 def test_incremental_minhash_resubmitted_id_batch_wins(spark):

@@ -433,12 +433,14 @@ def main() -> None:
     # ladder. The closure's eager localCheckpoint truncates the
     # candidate lineage out of the final mapping's plan, so the audit
     # plans the extracted candidate-edge builder directly on a
-    # 50-batch / 100k-stored synthetic (entity.py
-    # _incremental_candidate_edges docstring documents the contract).
+    # 50-batch / 100k-stored synthetic, over the in-memory index jh11
+    # derives from the stored names (entity.py _indexed_candidate_edges
+    # docstring documents the contract).
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from jobhouse_spark.operators.entity import (  # noqa: PLC0415
-        _incremental_candidate_edges,
+        _gram_index,
+        _indexed_candidate_edges,
     )
 
     new_nodes = spark.range(50).select(
@@ -449,8 +451,8 @@ def main() -> None:
         F.concat(F.lit("stored entity name number "),
                  F.col("id").cast("string")).alias("name")
     )
-    cand = _incremental_candidate_edges(
-        new_nodes, stored_nodes.unionByName(new_nodes), 4, 2
+    cand = _indexed_candidate_edges(
+        new_nodes, _gram_index(stored_nodes, gram_len=4, max_dist=2)
     )
     p = cand._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -511,7 +513,6 @@ def main() -> None:
 
     from jobhouse_spark.operators.entity import (  # noqa: PLC0415
         EntityGramIndex,
-        _indexed_candidate_edges,
         build_entity_index,
     )
 
