@@ -56,15 +56,18 @@ class MetadataStore:
     def ingested_batch_ids(self) -> DataFrame:
         return self.read().select("batch_id").distinct()
 
-    def filter_new_postings(self, incoming: DataFrame, key: str = "posting_id") -> DataFrame:
-        """A15 dedup feedback: drop postings already recorded.
+    def filter_new_postings(self, incoming: DataFrame) -> DataFrame:
+        """A15 dedup feedback: drop incoming rows whose ``s3_key`` is
+        already recorded in the store.
 
-        The reference's metadata rows don't carry posting ids (only
-        s3 keys); our bronze writer emits one row per posting with the
-        posting's id folded into the etag stream — here we dedup on the
-        incoming key against previously-seen keys persisted alongside.
+        The reference's metadata rows carry no posting ids, only s3
+        keys, so ``s3_key`` is the one dedup key. ``incoming`` without
+        that column raises ``ValueError``: passing it through unfiltered
+        would re-ingest the whole history.
         """
+        if "s3_key" not in incoming.columns:
+            raise ValueError(
+                "filter_new_postings needs an 's3_key' column in incoming; "
+                f"got {incoming.columns}")
         seen = self.read().select("s3_key").distinct()
-        if "s3_key" in incoming.columns:
-            return dedup_anti_join(incoming, seen, "s3_key")
-        return incoming
+        return dedup_anti_join(incoming, seen, "s3_key")

@@ -57,7 +57,6 @@ def apply_entity_map(
     df_key: str = "norm_name",
     map_key: str = "name",
     max_broadcast_entities: int = 2_000_000,
-    entity_count: int | None = None,
 ) -> DataFrame:
     """Map-back join of a ``name -> canonical`` mapping onto a corpus,
     with an adaptive join strategy: BROADCAST when the entity domain
@@ -66,16 +65,13 @@ def apply_entity_map(
     so the operator stays safe for arbitrary entity domains instead of
     risking a driver/executor OOM on an unconditional broadcast.
 
-    ``entity_count``: pass the known mapping cardinality to skip the
-    probe; otherwise a LIMIT-bounded count decides — it never counts
-    past threshold+1 rows, so the probe cost is capped by the
-    threshold, not the domain.
+    A LIMIT-bounded count decides: it never counts past threshold+1
+    rows, so the probe cost is capped by the threshold, not the domain.
 
     Both paths produce an identical mart — pinned by
     tests/test_silver_gold.py::test_apply_entity_map_paths_identical.
     """
-    if entity_count is None:
-        entity_count = mapping.limit(max_broadcast_entities + 1).count()
+    entity_count = mapping.limit(max_broadcast_entities + 1).count()
     side = F.broadcast(mapping) if entity_count <= max_broadcast_entities else mapping
     return df.join(side, df[df_key] == mapping[map_key])
 
@@ -502,10 +498,8 @@ class EntityGramIndex:
     changes WHICH grams probe the postings — i.e. candidate-set size —
     never whether a true match is found. ``updated()`` therefore
     appends postings/delkeys (REQUIRED for exactness of later batches)
-    but leaves ``gram_df`` stale by default; refresh it periodically
-    via ``refresh_df=True`` (an O(gram-vocabulary) merge) purely as a
-    candidate-pruning tune-up — the same rebuild-vs-rebalance contract
-    the IVF-PQ retrain rung measures (SCALE.md).
+    and leaves ``gram_df`` stale; rebuilding the index is the only
+    refresh.
 
     In production each DataFrame lives in a parquet table (``save`` /
     ``load``); daily appends are new files, so lineage truncates for
@@ -526,33 +520,20 @@ class EntityGramIndex:
         self.gram_len = gram_len
         self.max_dist = max_dist
 
-    def updated(
-        self, new_nodes: DataFrame, refresh_df: bool = False
-    ) -> "EntityGramIndex":
+    def updated(self, new_nodes: DataFrame) -> "EntityGramIndex":
         """Index covering the stored domain UNION ``new_nodes``
         (normalized, deduped, non-stored names — the resolver's
         ``new_nodes``). O(batch): two batch-sized explodes unioned
-        onto the stored tables. ``refresh_df=True`` additionally
-        merges the batch's gram counts into the df snapshot
-        (O(gram-vocabulary) — optional, see class docstring)."""
-        new_long = _long_gram_rows(new_nodes, self.gram_len, self.max_dist)
-        gram_df = self.gram_df
-        if refresh_df:
-            gram_df = (
-                gram_df.unionByName(
-                    new_long.groupBy("gram").agg(
-                        F.count("*").cast("long").alias("df")
-                    )
-                )
-                .groupBy("gram")
-                .agg(F.sum("df").alias("df"))
-            )
+        onto the stored tables; the df snapshot stays as it is (see
+        class docstring)."""
         return EntityGramIndex(
-            self.postings.unionByName(new_long),
+            self.postings.unionByName(
+                _long_gram_rows(new_nodes, self.gram_len, self.max_dist)
+            ),
             self.delkeys.unionByName(
                 _delkey_rows(new_nodes, self.gram_len, self.max_dist)
             ),
-            gram_df,
+            self.gram_df,
             self.gram_len,
             self.max_dist,
         )

@@ -5,8 +5,7 @@ plain incremental resolver and to a full re-resolve of the union,
 for ANY df snapshot staleness — the one-sided prefix theorem makes
 prefix CHOICE a performance knob, never a recall one. These tests pin
 that three ways (randomized split, planted cross-day bridge chain,
-parquet round-trip mid-chain), plus the no-op batches and the
-refresh_df merge path.
+parquet round-trip mid-chain), plus the no-op batches.
 """
 
 import random
@@ -164,43 +163,3 @@ def test_indexed_chained_bridge_with_parquet_roundtrip(spark, tmp_path):
     assert snapshots[2]["aurorx bnalytica"] == "aurora analytics"
     assert snapshots[2]["aurorx analytica"] == "aurora analytics"
     assert snapshots[3]["quasar shipping"] == snapshots[0]["quasar shipping"]
-
-
-@pytest.mark.campaign  # round-15 verdict task 1: driver verify-window
-def test_index_refresh_df_is_equivalence_preserving(spark, corpus):
-    """refresh_df=True merges batch gram counts into the snapshot —
-    a candidate-pruning tune-up that must not change results, and the
-    merged snapshot must equal a from-scratch rebuild of the df
-    aggregate over the union domain."""
-    from pyspark.sql import functions as F
-
-    cut = len(corpus) * 2 // 3
-    day1 = _df(spark, corpus[:cut])
-    batch = _df(spark, corpus[cut:])
-    stored = resolve_entities(day1)
-    idx = build_entity_index(day1, gram_len=4, max_dist=2)
-
-    # resolver's new_nodes = normalized batch minus stored names
-    new_nodes = (
-        resolve_entities(batch).select("name")
-        .join(stored.select("name"), "name", "left_anti")
-    )
-    fresh = idx.updated(new_nodes, refresh_df=True)
-    stale = idx.updated(new_nodes, refresh_df=False)
-
-    rebuilt = build_entity_index(
-        day1.unionByName(batch), gram_len=4, max_dist=2
-    )
-    assert _rows(fresh.gram_df) == _rows(rebuilt.gram_df)
-    assert _rows(fresh.postings) == _rows(rebuilt.postings)
-    assert _rows(stale.postings) == _rows(rebuilt.postings)
-
-    # and a next-day apply is identical under either snapshot
-    probe = _df(spark, corpus[:6])
-    m1, _ = resolve_entities_incremental_indexed(
-        probe, resolve_entities(day1.unionByName(batch)), fresh
-    )
-    m2, _ = resolve_entities_incremental_indexed(
-        probe, resolve_entities(day1.unionByName(batch)), stale
-    )
-    assert _rows(m1) == _rows(m2)

@@ -194,6 +194,11 @@ def test_metadata_store_roundtrip_and_dedup(spark):
     new = store.filter_new_postings(incoming)
     assert {r.batch_id for r in new.collect()} == {"b3"}
 
+    # without the dedup key the check must refuse, not pass every row
+    # through as new (that would re-ingest the whole history)
+    with pytest.raises(ValueError, match="s3_key"):
+        store.filter_new_postings(incoming.drop("s3_key"))
+
 
 def test_metadata_store_corrupt_raises(spark):
     """A CORRUPT store must raise, not silently restart dedup history:

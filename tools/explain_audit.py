@@ -615,9 +615,7 @@ def main() -> None:
     # (and review the diff — a count that went UP is the regression
     # class this gate exists for). sf0.01-only: ceilings are
     # layout-reviewed there; scale runs audit the named checks above.
-    if SF_DIR == "/root/testdata/sf0.01" and not os.environ.get(
-        "JH_SKIP_SCAN_SWEEP"
-    ):
+    if SF_DIR == "/root/testdata/sf0.01":
         import json  # noqa: PLC0415
 
         ceil_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
