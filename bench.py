@@ -9,12 +9,14 @@ function, where eager work such as l2's checkpoint runs) and ``write``
 (the noop write that forces the plan). After the run the Spark counters
 of every span (jobs, stages, tasks, failed tasks, shuffle, spill,
 executor CPU, input) go to the side file, $SPARK_GRAFT_BENCH_SIDE
-(default BENCH_side.json), with the driver CPU per query. The printed
-line keeps the median walls and the host readings the ``contended``
-flag rests on: the 1-min load average before the session starts, and
-over the run (``run_s``) the time the hypervisor gave the guest's CPUs
-to other guests (``steal_s``) and the time some task inside the guest
-waited for a CPU (``cpu_pressure_s``, the kernel's PSI).
+(default BENCH_side.json), with the driver CPU per query and the host's
+steal time over each timed repeat, so a wave that hits only a few
+queries shows where it landed. The printed line keeps the median walls
+and the host readings the ``contended`` flag rests on: the 1-min load
+average before the session starts, and over the run (``run_s``) the
+time the hypervisor gave the guest's CPUs to other guests
+(``steal_s``) and the time some task inside the guest waited for a CPU
+(``cpu_pressure_s``, the kernel's PSI).
 
 Why --gc-between-repeats exists (the 1000x median-of-3 OOM, round 8→9):
 each repeat registers fresh ShuffleDependencies and broadcast blocks;
@@ -173,6 +175,7 @@ class _Timer:
         self.tracer = Tracer(spark.sparkContext, enabled=True)
         self.walls: dict[str, list[float]] = {}
         self.cpus: dict[str, list[float]] = {}
+        self.steals: dict[str, list[float]] = {}
 
     def between_repeats(self) -> None:
         if self.gc:
@@ -183,7 +186,7 @@ class _Timer:
             time.sleep(0.5)  # let the cleaner queue drain
 
     def run(self, name: str, build, write=_noop):
-        t0, c0 = time.perf_counter(), time.process_time()
+        t0, c0, st0 = time.perf_counter(), time.process_time(), host_steal_s()
         with self.tracer.span(name):
             with self.tracer.span("build"):
                 out = build()
@@ -191,6 +194,7 @@ class _Timer:
                 write(out)
         self.walls.setdefault(name, []).append(time.perf_counter() - t0)
         self.cpus.setdefault(name, []).append(time.process_time() - c0)
+        self.steals.setdefault(name, []).append(host_steal_s() - st0)
         return out
 
     def medians(self, names) -> tuple[dict, dict]:
@@ -200,21 +204,23 @@ class _Timer:
     def counters(self) -> dict[str, list[dict]]:
         """Per query or phase: the counters of each warm repeat (repeat 2
         on; repeat 1 when it is the only one), inclusive of the build and
-        write spans, which are listed too."""
+        write spans, which are listed too, and the host's steal time over
+        the repeat."""
         t = self.tracer
         t.collect_counters()
+        steals = {n: iter(v) for n, v in self.steals.items()}
         reps: dict[str, list] = {}
         for s in t.spans.values():  # insertion order = run order
             if s.parent is None:
-                reps.setdefault(s.name, []).append(s)
+                reps.setdefault(s.name, []).append((s, next(steals[s.name])))
 
         def row(s) -> dict:
             return {"wall_s": round(s.duration, 4),
                     **{k: round(t.inclusive(s, k), 3) for k in COUNTERS}}
 
-        return {name: [{**row(s), **{t.spans[c].name: row(t.spans[c])
-                                     for c in s.children}}
-                       for s in (ss[1:] or ss)]
+        return {name: [{**row(s), "steal_s": round(steal, 2),
+                        **{t.spans[c].name: row(t.spans[c]) for c in s.children}}
+                       for s, steal in (ss[1:] or ss)]
                 for name, ss in reps.items()}
 
 

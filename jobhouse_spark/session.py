@@ -44,6 +44,28 @@ def get_spark(
     queries and raise aggregate throughput (3.1x vs serial on 6
     concurrent queries). Scheduler mode is fixed at context start — it
     cannot be flipped on a live session.
+
+    DataFrame debugging is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark 4.1
+    turns it on by default: then every ``F.col`` call and every method
+    of the classic ``Column`` runs ``pyspark.errors.utils._with_origin``,
+    which makes four py4j round trips (active session, a ``conf.get``,
+    ``PySparkCurrentOrigin`` set and clear), walks the Python stack and
+    tries ``import IPython`` / ``import ipykernel``. Where IPython is
+    installed the first call loads it, with jedi, prompt_toolkit and
+    pdb, into the driver for good. On a 4-core host, 1,000 Column calls
+    took 1.41-1.47 s with it on and 0.35-0.40 s with it off, and the
+    Python driver ended a benchmark dashboard refresh at 151-154 MB of
+    RSS instead of 126-130 MB (1,289 modules loaded instead of 752).
+    The cost: an ANSI error raised by a DataFrame-API expression keeps
+    its error class (``[DIVIDE_BY_ZERO]``), but its ``== DataFrame ==``
+    context names a py4j frame ("divide was called from
+    NativeMethodAccessorImpl") instead of the Python ``file:line``. To
+    get the call sites back, pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
+    PySpark reads the flag once per process and caches it
+    (``pyspark.errors.utils._enable_debugging_cache``), so the first
+    session of a process decides for every later one.
     """
     cpus = local_cores()
     builder = (
@@ -66,6 +88,8 @@ def get_spark(
         # local mode: the driver is the only JVM; give it the machine
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
+        # no per-Column call-site capture on the driver (see docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -104,7 +104,11 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
     """Drive a streaming DataFrame to completion synchronously
     (AvailableNow semantics via processAllAvailable) into a memory sink;
-    return the sink as a batch DataFrame."""
+    return the sink as a batch DataFrame.
+
+    The sink's temp view is dropped before returning: the returned
+    frame's plan holds the sink, so its rows live only as long as that
+    frame, not for the life of the session."""
     name = f"jh_sink_{os.getpid()}_{next(_SINK_COUNTER)}"
     q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
     try:
@@ -112,7 +116,11 @@ def run_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
     finally:
         q.stop()
         q.awaitTermination()
-    return df.sparkSession.table(name)
+    spark = df.sparkSession
+    try:
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def tumbling_counts(events: DataFrame) -> DataFrame:

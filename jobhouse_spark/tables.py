@@ -5,6 +5,13 @@ DataFrame handle (not the data). At 100 TB these would be catalog
 tables; column pruning + predicate pushdown to the parquet scan is
 preserved either way because we return the raw reader output and let
 each query select/filter declaratively.
+
+A path read infers its schema once per process: ``_read_parquet``
+keeps the inferred ``StructType`` per path, keyed by the size and
+mtime of every local file under it and by the parquet inference confs,
+and later reads pass it to ``spark.read.schema``. Without a schema
+every read starts a one-task inference job, and registry queries build
+a fresh ``Tables`` per call.
 """
 
 from __future__ import annotations
@@ -12,6 +19,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -27,6 +35,45 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> (fingerprint, inferred schema); one entry per path read
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _local_files(path: str) -> tuple:
+    """(name, size, st_mtime_ns) of every local file under ``path``;
+    empty when nothing under it is on the local file system."""
+    paths = [path] if os.path.isfile(path) else [
+        os.path.join(root, f) for root, _dirs, files in os.walk(path) for f in files]
+    try:
+        return tuple(sorted((p, st.st_size, st.st_mtime_ns)
+                            for p, st in ((p, os.stat(p)) for p in paths)))
+    except OSError:  # a file went away while we listed
+        return ()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred by an
+    earlier read of the same files under the same confs."""
+    files = _local_files(path)
+    if not files:
+        return spark.read.parquet(path)
+    key = (files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
 
 
 class Tables:
@@ -73,7 +120,7 @@ class Tables:
                 if name == "events":
                     df = self._load_events(path)
                 else:
-                    df = self.spark.read.parquet(path)
+                    df = _read_parquet(self.spark, path)
             self._cache[name] = df
         return self._cache[name]
 
@@ -91,7 +138,7 @@ class Tables:
         from pyspark.sql import functions as F  # noqa: PLC0415
 
         self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = self.spark.read.parquet(path)
+        df = _read_parquet(self.spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
         return df

@@ -100,8 +100,9 @@ def test_counters_repeat_exactly_and_land_in_side_file(
     monkeypatch, capsys, tmp_path, sf_dir
 ):
     """One real pass at sf0.001 over three headline queries: every query
-    carries a build/write split, and the structural counters of the warm
-    repeats (2 and 3) are identical."""
+    carries a build/write split and the host's steal time per repeat,
+    and the structural counters of the warm repeats (2 and 3) are
+    identical."""
     bench = _load_bench()
     keep = ["g1_groupby_agg", "j1_inner_equi", "o1_global_sort"]
     skip = ",".join(n for n in _HEADLINE if n not in keep)
@@ -117,6 +118,7 @@ def test_counters_repeat_exactly_and_land_in_side_file(
             assert set(bench.COUNTERS) <= set(span["write"])
             assert span["write"]["jobs"] >= 1 and span["tasks"] >= 1
             assert span["failed_tasks"] == 0
+            assert span["steal_s"] >= 0
         for k in ("jobs", "stages", "tasks"):
             assert r2[k] == r3[k], (name, k, r2, r3)
             assert r2["build"][k] == r3["build"][k], (name, "build", k)

@@ -645,3 +645,15 @@ def test_t14_left_join_null_rows_emit_on_eviction_only(spark):
     # 1 matched eagerly; 2 evicted-unmatched -> null row via the
     # no-data batch; 90 unmatched but STILL IN STATE -> nothing
     assert got == [(1, 101), (2, None)], got
+
+
+def test_memory_sinks_leave_no_view(spark, sf_dir):
+    """run_to_memory drops its sink's temp view: the rows live only as
+    long as the frame it returns, not for the life of the session."""
+    from jobhouse_spark.queries import all_queries
+
+    reg = all_queries()
+    for name in ("t1_stream_source", "t2_tumbling_window"):
+        assert reg[name].fn(spark, sf_dir).collect()
+    assert [t.name for t in spark.catalog.listTables()
+            if t.name.startswith("jh_sink_")] == []

@@ -70,7 +70,6 @@ append-mode: each campaign adds one record. CI pins seeds 0–2
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import random
@@ -85,7 +84,6 @@ MICRO = 1_000_000
 HOUR = 3600 * MICRO
 GAPS_S = (10 * 60, 15 * 60, 30 * 60, 45 * 60)  # every gap a check uses
 EPOCH_US = 1_772_323_200 * MICRO  # 2026-03-01T00:00:00Z
-_CTR = itertools.count()
 
 _EV_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -185,19 +183,12 @@ def _stream(spark, d: str):
 
 
 def _run_stream(df, mode: str):
-    """Drive to completion into a memory sink, collect, DROP the sink
-    view (a campaign leaves no per-seed driver-memory residue)."""
-    spark = df.sparkSession
-    name = f"fz_sink_{os.getpid()}_{next(_CTR)}"
-    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-    pdf = spark.table(name).toPandas()
-    spark.catalog.dropTempView(name)
-    return pdf
+    """Drive to completion into a memory sink and collect (the sink view
+    is already dropped: a campaign leaves no per-seed driver-memory
+    residue)."""
+    from jobhouse_spark.streaming.jobs import run_to_memory  # noqa: PLC0415
+
+    return run_to_memory(df, mode).toPandas()
 
 
 def _duck(duck, sql: str):
