@@ -24,6 +24,18 @@ def local_cores() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
 
 
+def driver_memory() -> str:
+    """Driver heap ceiling: ``$SPARK_DRIVER_MEMORY`` when set, else half
+    of this host's RAM, at most 48g. A ceiling above physical memory
+    lets G1 keep growing the heap until the kernel kills the JVM: a
+    test-suite JVM under a 48g ceiling reached 15.4 GB of RSS on a
+    16 GB host and was OOM-killed mid-suite."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "jobhouse_spark",
     master: str | None = None,
@@ -85,8 +97,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", cpus)
         # -- Python boundary is always Arrow-batched, never per-row pickle
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local mode: the driver is the only JVM; give it the machine
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # local mode: the driver is the only JVM; give it half the machine
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # no per-Column call-site capture on the driver (see docstring)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")

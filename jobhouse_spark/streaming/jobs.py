@@ -19,45 +19,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from jobhouse_spark.tables import events_schema, ts_from_nanos
 
 _SINK_COUNTER = itertools.count()
-
-def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("ts", ts_type, True),
-            T.StructField("user_id", T.LongType(), True),
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-            T.StructField("props", T.StringType(), True),
-        ]
-    )
-
-
-def _events_ts_is_nanos(sf_dir: str) -> bool:
-    """File-stream sources require a user-supplied schema, so we must know
-    whether the fixture stores `ts` as TIMESTAMP(NANOS) (old generator) or
-    TIMESTAMP(MICROS) (current). Spark can't read nanos as TimestampType
-    directly — that case needs the nanosAsLong long-read + DIV 1000 shim."""
-    import pyarrow.parquet as pa_pq  # noqa: PLC0415
-
-    path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        # multi-file layout (tools/make_scale_data.py): probe any part
-        # file — the generator writes a uniform schema
-        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-        if not parts:
-            raise FileNotFoundError(
-                f"no parquet part files in {path} — truncated corpus "
-                f"(interrupted make_scale_data.py run?)"
-            )
-        path = os.path.join(path, parts[0])
-    ts = pa_pq.read_schema(path).field("ts").type
-    return getattr(ts, "unit", None) == "ns"
-
-
 _STREAM_DIRS: dict[str, str] = {}
 
 
@@ -83,22 +48,14 @@ def _events_stream_dir(sf_dir: str) -> str:
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1: file-stream source over the events parquet. `ts` lands as a
-    proper TimestampType either way; nanos fixtures go through the
-    legacy long-read shim, micros read natively."""
-    if _events_ts_is_nanos(sf_dir):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = (
-            spark.readStream.schema(_events_stream_schema(T.LongType()))
-            .format("parquet")
-            .load(_events_stream_dir(sf_dir))
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    proper TimestampType either way: nanos fixtures stream `ts` as a
+    long under ``events_schema`` and go through ``ts_from_nanos``."""
     raw = (
-        spark.readStream.schema(_events_stream_schema(T.TimestampType()))
+        spark.readStream.schema(events_schema(sf_dir))
         .format("parquet")
         .load(_events_stream_dir(sf_dir))
     )
-    return raw
+    return ts_from_nanos(raw)
 
 
 def run_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:

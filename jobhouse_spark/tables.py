@@ -19,7 +19,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLE_NAMES = (
     "region",
@@ -38,7 +39,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # session confs that change what parquet schema inference returns
 _INFERENCE_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -46,7 +46,7 @@ _INFERENCE_CONFS = (
 )
 
 # path -> (fingerprint, inferred schema); one entry per path read
-_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
 
 
 def _local_files(path: str) -> tuple:
@@ -76,6 +76,63 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def _events_ts_is_nanos(sf_dir: str) -> bool:
+    """Whether ``sf_dir``'s events parquet stores ``ts`` as an INT64
+    TIMESTAMP(NANOS), read from one file's footer. The parquet column,
+    not its arrow type: arrow also reads Spark's INT96 timestamps as
+    ``timestamp[ns]``, and Spark reads those as timestamps."""
+    import pyarrow.parquet as pa_pq  # noqa: PLC0415
+
+    path = os.path.join(sf_dir, "events.parquet")
+    if os.path.isdir(path):
+        # multi-file layout (tools/make_scale_data.py): probe any part
+        # file — the generator writes a uniform schema
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        if not parts:
+            raise FileNotFoundError(
+                f"no parquet part files in {path} — truncated corpus "
+                f"(interrupted make_scale_data.py run?)"
+            )
+        path = os.path.join(path, parts[0])
+    schema = pa_pq.read_metadata(path).schema
+    ts = schema.column(schema.names.index("ts"))
+    return ts.physical_type == "INT64" and "timeUnit=nanoseconds" in str(ts.logical_type)
+
+
+def events_schema(sf_dir: str) -> T.StructType:
+    """Explicit schema of ``sf_dir``'s events parquet. ``ts`` is bigint
+    where the files store TIMESTAMP(NANOS): Spark cannot read those as
+    a timestamp, but reads them as a long under an explicit schema
+    without any session conf (inference alone raises
+    ``PARQUET_TYPE_ILLEGAL``). Pass the result through ``ts_from_nanos``."""
+    ts = T.LongType() if _events_ts_is_nanos(sf_dir) else T.TimestampType()
+    return T.StructType(
+        [
+            T.StructField("event_id", T.LongType(), True),
+            T.StructField("ts", ts, True),
+            T.StructField("user_id", T.LongType(), True),
+            T.StructField("event_type", T.StringType(), True),
+            T.StructField("value", T.DoubleType(), True),
+            T.StructField("props", T.StringType(), True),
+        ]
+    )
+
+
+def ts_from_nanos(df: DataFrame) -> DataFrame:
+    """A bigint (epoch-nanos) ``ts`` as a microsecond timestamp — the
+    same truncation DuckDB applies when it coerces ns → µs, so oracle
+    comparisons agree. Any other ``ts`` passes through unchanged.
+
+    ASSUMPTION: a bigint ts is epoch-NANOS. The only bigint-ts
+    producers are nanos-typed events files read under
+    ``events_schema`` (and ``make_scale_data.py`` copies of them); the
+    DIV 1000 would misconvert an epoch-µs/-ms bigint (symptom: every
+    event lands near 1970)."""
+    if dict(df.dtypes).get("ts") != "bigint":
+        return df
+    return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+
+
 class Tables:
     """Lazy per-table DataFrame accessor: ``Tables(spark, sf_dir).lineitem``."""
 
@@ -99,22 +156,10 @@ class Tables:
                 df = self.spark.table(f"{self.sf_dir[6:]}{name}")
                 if name == "events":
                     # a catalog-registered RAW events table may carry ts
-                    # as nanos-read-as-bigint (the same reader quirk
-                    # _load_events handles on the path branch) — apply
-                    # the identical µs coercion so "every registry query
-                    # runs unchanged" holds for events too.
-                    # ASSUMPTION (shared with _load_events): a bigint ts
-                    # is epoch-NANOS. A table registered with epoch-µs
-                    # or -ms bigints would be silently shifted to ~1970
-                    # — if you register such a table, convert ts to a
-                    # real timestamp at registration time instead of
-                    # relying on this branch.
-                    from pyspark.sql import functions as F  # noqa: PLC0415
-
-                    if dict(df.dtypes).get("ts") == "bigint":
-                        df = df.withColumn(
-                            "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-                        )
+                    # as nanos-read-as-bigint, as the path branch does;
+                    # register epoch-µs/-ms bigints as real timestamps
+                    # instead (see ts_from_nanos)
+                    df = ts_from_nanos(df)
             else:
                 path = os.path.join(self.sf_dir, f"{name}.parquet")
                 if name == "events":
@@ -125,23 +170,17 @@ class Tables:
         return self._cache[name]
 
     def _load_events(self, path: str) -> DataFrame:
-        """events.parquet stores ts as TIMESTAMP(NANOS), which the Spark
-        parquet reader rejects. Read nanos as long and convert to a
-        microsecond timestamp — the same truncation DuckDB applies when
-        it coerces ns → µs, so oracle comparisons agree.
-
-        The bigint-means-NANOS assumption is safe here because the only
-        bigint-ts producers on the path branch are the driver's
-        nanos-typed events.parquet and make_scale_data.py copies of it;
-        the DIV 1000 would misconvert an epoch-µs/-ms bigint (symptom:
-        every event lands near 1970)."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(self.spark, path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
+        """events.parquet with ``ts`` as a microsecond timestamp. Files
+        that store ``ts`` as TIMESTAMP(NANOS) are read under
+        ``events_schema`` (``ts`` as a long, no session conf set) and
+        converted by ``ts_from_nanos``; micros files are a plain
+        ``_read_parquet``."""
+        schema = events_schema(self.sf_dir)
+        if isinstance(schema["ts"].dataType, T.LongType):
+            df = self.spark.read.schema(schema).parquet(path)
+        else:
+            df = _read_parquet(self.spark, path)
+        return ts_from_nanos(df)
 
     def __getattr__(self, name: str) -> DataFrame:
         if name.startswith("_"):

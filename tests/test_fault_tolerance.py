@@ -11,8 +11,10 @@ vacuously).
 
 Local mode pins maxFailures via the master string ``local[N, F]``; a
 SparkSession's master is fixed per JVM, and the suite's shared session
-runs plain local[32] (maxFailures=1), so each case runs in its own
-subprocess JVM.
+runs ``get_spark``'s ``local[N]`` with N from ``local_cores()``
+(maxFailures=1), so each case runs in its own subprocess JVM. The
+probe builds a vanilla session because ``get_spark`` takes no
+``local[N, F]`` master.
 """
 
 from __future__ import annotations

@@ -9,10 +9,9 @@ tools/query_fuzz.py runs the wide campaigns (results in SCALE.md).
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
+from jobhouse_spark.tables import Tables
 from tools.query_fuzz import TABLES, Gen, build_pools, run_campaign
 
 SEED_BLOCKS = [(1, 15), (16, 30), (31, 45)]
@@ -20,9 +19,7 @@ SEED_BLOCKS = [(1, 15), (16, 30), (31, 45)]
 
 @pytest.fixture(scope="module")
 def fuzz_env(spark, sf_dir, duck):
-    for t in TABLES:
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) \
-            .createOrReplaceTempView(t)
+    Tables(spark, sf_dir).register_views(tuple(TABLES))
     return build_pools(duck)
 
 

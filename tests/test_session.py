@@ -1,8 +1,10 @@
-"""Session factory settings: those read from the environment, and the
-driver-side DataFrame debugging the factory turns off."""
+"""Session factory settings: those read from the environment, the
+driver-side DataFrame debugging the factory turns off, and the tools
+that must build their sessions through it."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pyspark.errors.utils as errors_utils
@@ -10,7 +12,7 @@ import pytest
 from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 
-from jobhouse_spark.session import local_cores
+from jobhouse_spark.session import driver_memory, local_cores
 
 
 def test_local_cores_reads_env(monkeypatch):
@@ -25,6 +27,19 @@ def test_local_cores_falls_back_to_host_cores(monkeypatch):
     assert local_cores() == str(os.cpu_count())
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
     assert local_cores() == str(os.cpu_count())
+
+
+def test_driver_memory_fits_the_host(monkeypatch):
+    """Unset (or empty), the heap ceiling is half of this host's RAM, at
+    most 48g: never a fixed 48g that outgrows a small host."""
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert driver_memory() == "3g"
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "")
+    empty = driver_memory()
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY")
+    assert driver_memory() == empty
+    assert 0 < int(empty.removesuffix("m")) <= min(48 * 1024, ram_mb // 2)
 
 
 def test_column_calls_capture_no_call_site(spark, monkeypatch):
@@ -48,3 +63,17 @@ def test_column_calls_capture_no_call_site(spark, monkeypatch):
 def test_ansi_error_keeps_its_class_without_call_sites(spark):
     with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
         spark.range(1).select((F.col("id") / 0).alias("x")).collect()
+
+
+def test_tools_build_sessions_through_get_spark():
+    """Every tool but ``driver_sim.py`` (which stands in for the driver's
+    own vanilla session) gets its session, cores and heap from
+    ``get_spark``: no hand-built builder, no private heap plumbing."""
+    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    forks = sorted(
+        os.path.basename(p)
+        for p in glob.glob(os.path.join(tools, "*.py"))
+        if os.path.basename(p) != "driver_sim.py"
+        and any(m in open(p).read() for m in ("SparkSession.builder", "PYSPARK_SUBMIT_ARGS"))
+    )
+    assert forks == []

@@ -1,10 +1,16 @@
 """Table loading: a path's parquet schema is inferred once per process
-and re-inferred when the files under it change."""
+and re-inferred when the files under it change; nanos events files are
+read without touching the caller's session confs."""
 
 from __future__ import annotations
 
 import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from jobhouse_spark.streaming.jobs import run_to_memory, stream_events
 from jobhouse_spark.tables import Tables
 
 
@@ -21,15 +27,13 @@ def _jobs_while(spark, fn) -> list[int]:
 
 
 def test_second_read_starts_no_job(spark, sf_dir):
-    # the first reads infer; events first, because it sets the
-    # nanosAsLong conf that is part of every path's key
     first = Tables(spark, sf_dir)
-    first_dtypes = {n: first.load(n).dtypes for n in ("events", "orders")}
+    first_dtypes = {n: first.load(n).dtypes for n in ("orders", "events")}
     again = {}
 
     def read_again():
         t = Tables(spark, sf_dir)
-        again.update({n: t.load(n) for n in ("events", "orders")})
+        again.update({n: t.load(n) for n in ("orders", "events")})
 
     assert _jobs_while(spark, read_again) == []
     assert {n: df.dtypes for n, df in again.items()} == first_dtypes
@@ -46,3 +50,33 @@ def test_rewritten_file_yields_new_schema(spark, tmp_path):
     region = Tables(spark, str(tmp_path)).region
     assert region.columns == ["id", "twice"]
     assert sorted(r.twice for r in region.collect()) == [0, 2, 4]
+
+
+def test_nanos_events_read_without_session_conf(spark, tmp_path):
+    """TIMESTAMP(NANOS) events come back truncated to microseconds, as
+    DuckDB reads them, from both the batch and the stream reader, and
+    neither sets ``nanosAsLong`` on the caller's session."""
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(conf)
+    ns = [1_700_000_000_000_000_000, 1_700_000_000_123_456_789, 1_700_003_600_000_001_000]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(np.array(ns, dtype="datetime64[ns]")),
+            "user_id": pa.array([7, 7, 8], pa.int64()),
+            "event_type": ["view", "click", "view"],
+            "value": [1.0, 2.0, 3.0],
+            "props": ["{}", "{}", "{}"],
+        }),
+        str(tmp_path / "events.parquet"),
+        version="2.6",
+    )
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type.unit == "ns"
+    want = [v // 1000 for v in ns]
+
+    def micros(df):
+        return [r.us for r in df.selectExpr("unix_micros(ts) AS us").orderBy("us").collect()]
+
+    assert micros(Tables(spark, str(tmp_path)).events) == want
+    assert micros(run_to_memory(stream_events(spark, str(tmp_path)))) == want
+    assert spark.conf.get(conf, None) is None

@@ -21,6 +21,8 @@ reported, not hidden.
 
 Usage: python tools/bucket_bench.py [sf_dir] [--buckets=64] [--reuse]
                                     [--queries=q18,q5] [--json=PATH]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 12g).
 """
 
 from __future__ import annotations
@@ -89,23 +91,15 @@ def _exchanges(df, spark=None) -> dict[str, int]:
     return {"exchange": fresh, "reused": reused}
 
 
-def _child_session(sf_dir: str, base: str, buckets: int, layout: str, mem: str):
+def _child_session(sf_dir: str, base: str, buckets: int, layout: str):
     """Fresh-JVM session with the requested layout registered; returns
     (spark, loc). Bucketed re-attaches the ALREADY-WRITTEN layout as
     external CLUSTERED BY tables (bucket ids live in the part-file
     names, so the spec survives the original session)."""
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-    from pyspark.sql import SparkSession  # noqa: PLC0415
+    from jobhouse_spark.session import get_spark  # noqa: PLC0415
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("bucket_bench_child")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.warehouse.dir", base + "_wh")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="bucket_bench_child",
+                      extra_conf={"spark.sql.warehouse.dir": base + "_wh"})
     if layout == "unbucketed":
         return spark, sf_dir
     for tbl, key in BUCKETED.items():
@@ -129,7 +123,7 @@ def main() -> None:
     buckets = int(next((a.split("=")[1] for a in sys.argv
                         if a.startswith("--buckets=")), "64"))
     reuse = "--reuse" in sys.argv
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "12g")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "12g")
     isolate = "--isolate" in sys.argv
     run_one = next((a.split("=", 1)[1] for a in sys.argv
                     if a.startswith("--run-one=")), None)
@@ -144,7 +138,7 @@ def main() -> None:
         base = f"/tmp/jh_bkt_{os.path.basename(sf_dir.rstrip('/'))}_{buckets}"
         from jobhouse_spark.queries import all_queries  # noqa: PLC0415
 
-        spark, loc = _child_session(sf_dir, base, buckets, layout, mem)
+        spark, loc = _child_session(sf_dir, base, buckets, layout)
         spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
         t0 = time.perf_counter()
         df = all_queries()[qname].fn(spark, loc)
@@ -180,23 +174,12 @@ def main() -> None:
     if write_only:
         queries = []
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "12g")
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-
-    from pyspark.sql import SparkSession
-
     from jobhouse_spark.queries import all_queries
+    from jobhouse_spark.session import get_spark
 
     base = f"/tmp/jh_bkt_{os.path.basename(sf_dir.rstrip('/'))}_{buckets}"
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("bucket_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.warehouse.dir", base + "_wh")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="bucket_bench",
+                      extra_conf={"spark.sql.warehouse.dir": base + "_wh"})
 
     write_walls = {}
     for tbl, key in BUCKETED.items():

@@ -32,6 +32,8 @@ Checked per block:
 Usage:
   python tools/cdc_fuzz.py [--blocks=20] [--keys=100] [--batches=6]
                            [--seed0=90000] [--json=PATH]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 8g).
 """
 
 from __future__ import annotations
@@ -281,18 +283,12 @@ def main() -> None:
     n_batches = int(opt.get("batches", "6"))
     seed0 = int(opt.get("seed0", "90000"))
 
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = "--driver-memory 8g pyspark-shell"
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
     import duckdb
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("cdc_fuzz")
-        .config("spark.sql.shuffle.partitions", "8")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from jobhouse_spark.session import get_spark
+
+    spark = get_spark(app_name="cdc_fuzz")
     duck = duckdb.connect()
 
     results = []

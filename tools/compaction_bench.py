@@ -19,6 +19,8 @@ on min/max), and wall time. The rows-produced ratio IS the skip ratio.
 Usage:
   python tools/compaction_bench.py [sf_dir] [--table=orders]
          [--frag-files=256] [--target-mb=64] [--sel=0.001] [--json=PATH]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 12g).
 """
 
 from __future__ import annotations
@@ -73,23 +75,14 @@ def main() -> None:
     sel = float(opt.get("sel", "0.001"))
     key = KEYS[table]
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "12g")
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "12g")
     from pyspark.sql import functions as F
 
     from jobhouse_spark.operators.maintenance import compact_parquet
+    from jobhouse_spark.session import get_spark
     from jobhouse_spark.tables import Tables
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("compaction_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="compaction_bench")
 
     base = f"/tmp/jh_compact_{os.path.basename(sf_dir.rstrip('/'))}_{table}"
     frag, comp = f"{base}/frag", f"{base}/compacted"

@@ -45,6 +45,8 @@ overstates.
 Usage:
   python tools/entity_scale_bench.py [--entities=100000] [--rows-per=5]
          [--corpus=grid|zipf] [--json=PATH]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 12g).
 
 `--incremental=K` (round 13): the production daily-ingest rung. Hold
 out K entities' variants as the day-2 batch, fully resolve the rest
@@ -396,25 +398,16 @@ def main() -> None:
     n_entities = int(opt.get("entities", "100000"))
     rows_per = int(opt.get("rows-per", "5"))
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "12g")
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "12g")
     from pyspark.sql import functions as F
 
     from jobhouse_spark.operators.entity import (
         normalize_entity_name,
         resolve_entities,
     )
+    from jobhouse_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("entity_scale_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="entity_scale_bench")
 
     corpus = opt.get("corpus", "grid")
     if corpus == "zipf":

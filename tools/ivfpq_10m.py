@@ -34,6 +34,8 @@ Measured, in order:
 Usage:
   python tools/ivfpq_10m.py [--n=10000000] [--batch=100000]
          [--cells=96] [--queries=16] [--json=PATH] [--keep=1]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 12g).
 """
 
 from __future__ import annotations
@@ -63,11 +65,8 @@ def main() -> None:
     cells = int(opt.get("cells", "96"))
     n_q = int(opt.get("queries", "16"))  # per region
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "12g")
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-
-    from pyspark.sql import SparkSession, Window
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "12g")
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from jobhouse_spark.functions.vectors import dot_micro, micro_vec
@@ -79,14 +78,10 @@ def main() -> None:
         pq_write_index,
         train_centroids,
     )
+    from jobhouse_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ivfpq_10m")
-        .config("spark.sql.shuffle.partitions", "64")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="ivfpq_10m",
+                      extra_conf={"spark.sql.shuffle.partitions": "64"})
 
     base = "/tmp/jh_ivfpq_10m"
     os.makedirs(base, exist_ok=True)

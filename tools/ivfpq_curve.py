@@ -40,6 +40,8 @@ sweeps 32/48/64 bits, because at growing UNIQUE-content counts the
 
 Usage: python tools/ivfpq_curve.py [sf_dir] [--cells=32] [--queries=64]
                                    [--nsub=8] [--ncodes=16] [--json=PATH]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 8g).
 """
 
 from __future__ import annotations
@@ -107,21 +109,13 @@ def main() -> None:
         raise SystemExit(f"--nsub must divide dim {DIM}")
     sub_dim = DIM // N_SUB
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from jobhouse_spark.operators.ann import ivf_pq_top_k, train_centroids
+    from jobhouse_spark.session import get_spark
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "8g")
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ivfpq_curve")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
+    spark = get_spark(app_name="ivfpq_curve")
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     n_total = emb.count()

@@ -23,9 +23,9 @@ per-cell self-join bounded. This script runs BOTH at a scale corpus:
      why SemDeDup grows k with N (the k ∝ N run above is 70-80 s on
      the same corpus). Kept opt-in so the default run is brief.
 
-Usage: JH_SIM_DRIVER_MEM=12g python -u tools/l23_scale_check.py \
+Usage: SPARK_DRIVER_MEMORY=12g python -u tools/l23_scale_check.py \
            [sf_dir] [n_cells] [--with-fixed-k]
-       (defaults /tmp/jh_scale_30x 240)
+       (defaults /tmp/jh_scale_30x 240; cores from $SPARK_GRAFT_CPUS)
 """
 
 from __future__ import annotations
@@ -41,26 +41,15 @@ SF_DIR = _pos[0] if _pos else "/tmp/jh_scale_30x"
 N_CELLS = int(_pos[1]) if len(_pos) > 1 else 240
 WITH_FIXED_K = "--with-fixed-k" in sys.argv
 
-mem = os.environ.get("JH_SIM_DRIVER_MEM")
-if mem and "PYSPARK_SUBMIT_ARGS" not in os.environ:
-    os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-
-from pyspark.sql import SparkSession  # noqa: E402
-
 from jobhouse_spark.operators.ann import ivf_fixed_centroids, semantic_dedup  # noqa: E402
 from jobhouse_spark.queries.llm_ops_extra import _l23_oracle  # noqa: E402
+from jobhouse_spark.session import get_spark  # noqa: E402
 from jobhouse_spark.tables import Tables  # noqa: E402
 from tests.oracle import compare_frames, duckdb_connect  # noqa: E402
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("l23_scale_check")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="l23_scale_check")
     emb = Tables(spark, SF_DIR).embeddings
 
     # 1. scale-correct k: hash-check vs the k-interpolated oracle

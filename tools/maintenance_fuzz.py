@@ -42,6 +42,8 @@ Ops per step (seeded random):
 Usage:
   python tools/maintenance_fuzz.py [--trajectories=200] [--steps=8]
                                    [--seed0=120000] [--json=PATH]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 8g).
 """
 
 from __future__ import annotations
@@ -306,21 +308,15 @@ def main() -> None:
     n_steps = int(opt.get("steps", "8"))
     seed0 = int(opt.get("seed0", "120000"))
 
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = "--driver-memory 8g pyspark-shell"
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
+    from jobhouse_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("maintenance_fuzz")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
+    spark = get_spark(app_name="maintenance_fuzz", extra_conf={
+        "spark.sql.shuffle.partitions": "8",
         # keep day=YYYY-MM-DD a STRING on read (the model's type);
         # inference to DATE would be a type, not content, difference
-        .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+        "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+    })
 
     stats = {"ops": collections.Counter(), "checks": 0,
              "rebuild_checks": 0, "skipped_steps": 0}

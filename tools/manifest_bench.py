@@ -23,6 +23,8 @@ Usage:
   python tools/manifest_bench.py [sf_dir] [--table=events]
          [--key=event_id] [--files=2000] [--sel=0.001] [--json=PATH]
          [--update=1] [--batch_files=10]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 12g).
 """
 
 from __future__ import annotations
@@ -46,26 +48,17 @@ def main() -> None:
     n_files = int(opt.get("files", "2000"))
     sel = float(opt.get("sel", "0.001"))
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "12g")
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "12g")
     from pyspark.sql import functions as F
 
     from jobhouse_spark.operators.maintenance import (
         build_manifest,
         manifest_pruned_read,
     )
+    from jobhouse_spark.session import get_spark
     from jobhouse_spark.tables import Tables
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("manifest_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="manifest_bench")
 
     base = f"/tmp/jh_manifest_{os.path.basename(sf_dir.rstrip('/'))}_{table}"
     data = f"{base}/clustered"

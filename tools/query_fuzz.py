@@ -33,6 +33,8 @@ Dialect-intersection rules (each excludes a known cross-engine trap):
 Usage:
   python tools/query_fuzz.py [sf_dir] [--n=300] [--seed0=1] [--json=PATH]
 Exit 0 iff every seed matches. Writes a one-line JSON summary.
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 4g).
 """
 
 from __future__ import annotations
@@ -1106,24 +1108,15 @@ def main() -> None:
     cap = next((int(a.split("=")[1]) for a in sys.argv
                 if a.startswith("--cap=")), None)
 
-    from pyspark.sql import SparkSession
-
+    from jobhouse_spark.session import get_spark
+    from jobhouse_spark.tables import Tables
     from tests.oracle import duckdb_connect
 
     # scale-ladder campaigns need a real heap: full-table grids over a
     # replicated corpus collect into the fuzz driver for the compare
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("query_fuzz")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("JH_FUZZ_DRIVER_MEM", "4g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    for t in TABLES:
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) \
-            .createOrReplaceTempView(t)
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
+    spark = get_spark(app_name="query_fuzz")
+    Tables(spark, sf_dir).register_views(tuple(TABLES))
     duck = duckdb_connect(sf_dir)
     pools = build_pools(duck)
 

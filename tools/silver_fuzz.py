@@ -38,6 +38,8 @@ catches cardinality-dependent divergence (spill paths, hash collisions).
 Usage:
   python tools/silver_fuzz.py [--n=500] [--seed0=1] [--enlarge=0]
                               [--json=PATH]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 6g).
 """
 
 from __future__ import annotations
@@ -218,24 +220,12 @@ def main() -> None:
     # full list only samples them ~38% of seeds); default = full list
     shapes_opt = opt.get("shapes", "full")
 
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = "--driver-memory 6g pyspark-shell"
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
     import duckdb
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("silver_fuzz")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        # match the ENGINE session (jobhouse_spark/session.py): without
-        # ANSI, size(filter(NULL,...)) returns -1 vs NULL in ANSI/DuckDB
-        # — a tool-only false mismatch CI couldn't reproduce if the
-        # fixture ever gains NULL requirement arrays (ADVICE r13)
-        .config("spark.sql.ansi.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from jobhouse_spark.session import get_spark
+
+    spark = get_spark(app_name="silver_fuzz")
 
     root = tempfile.mkdtemp(prefix="jh_silver_fuzz_")
     materialize(spark, root, enlarge)

@@ -36,6 +36,8 @@ Build the corpus first:
 
 Usage: python tools/state_cardinality_stress.py [data_dir]
            [--max-files=100] [--json=PATH] [--cases=t7b,t13w]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap of every child JVM
+from $SPARK_DRIVER_MEMORY (default 14g).
 
 Crash-recovery mode (round 11): kill a run MID-STREAM after batch N
 commits, restart from the checkpoint, and assert the recovered output
@@ -137,47 +139,27 @@ def _state_metrics(progress_list) -> dict:
 
 def child(case: str, provider: str, max_files: int) -> None:
     """One (case, provider) run in this JVM; prints ONE JSON line."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from jobhouse_spark.streaming.jobs import (
-        _events_stream_dir,
-        _events_stream_schema,
-        _events_ts_is_nanos,
-    )
-    import pyspark.sql.types as T
+    from jobhouse_spark.session import get_spark
+    from jobhouse_spark.streaming.jobs import _events_stream_dir
+    from jobhouse_spark.tables import events_schema, ts_from_nanos
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName(f"hc_stress_{case}_{provider}")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.streaming.numRecentProgressUpdates", "400")
+    spark = get_spark(app_name=f"hc_stress_{case}_{provider}", extra_conf={
+        "spark.sql.streaming.numRecentProgressUpdates": "400",
         # update-mode memory sink materializes ~n_users rows per batch
         # to the driver — harness plumbing, not the measured path
-        .config("spark.driver.maxResultSize", "4g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+        "spark.driver.maxResultSize": "4g",
+    })
     if provider == "rocksdb":
         spark.conf.set(PROVIDER_KEY, ROCKSDB)
 
-    if _events_ts_is_nanos(DATA_DIR):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = (
-            spark.readStream.schema(_events_stream_schema(T.LongType()))
-            .format("parquet")
-            .option("maxFilesPerTrigger", max_files)
-            .load(_events_stream_dir(DATA_DIR))
-        )
-        events = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    else:
-        events = (
-            spark.readStream.schema(_events_stream_schema(T.TimestampType()))
-            .format("parquet")
-            .option("maxFilesPerTrigger", max_files)
-            .load(_events_stream_dir(DATA_DIR))
-        )
+    events = ts_from_nanos(
+        spark.readStream.schema(events_schema(DATA_DIR))
+        .format("parquet")
+        .option("maxFilesPerTrigger", max_files)
+        .load(_events_stream_dir(DATA_DIR))
+    )
 
     shape, mode = (
         (_running_count, "update") if case == "t7b" else (_session_append, "append")
@@ -247,14 +229,10 @@ def _crash_child(case: str, provider: str, max_files: int,
     os._exit(137) as soon as that many batches have committed (the
     next batch is typically in flight — an abrupt mid-stream death).
     Prints CRASHCHILD json when it survives to completion."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from jobhouse_spark.streaming.jobs import (
-        _events_stream_schema,
-        _events_ts_is_nanos,
-    )
-    import pyspark.sql.types as T
+    from jobhouse_spark.session import get_spark
+    from jobhouse_spark.tables import events_schema, ts_from_nanos
 
     # STABLE stream-source dir shared by every leg of one crash test:
     # the checkpoint's seen-files log records absolute paths, so the
@@ -273,34 +251,19 @@ def _crash_child(case: str, provider: str, max_files: int,
         else:
             os.symlink(src, os.path.join(stream_src, "events.parquet"))
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName(f"hc_crash_{case}_{provider}")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .getOrCreate()
+    spark = get_spark(
+        app_name=f"hc_crash_{case}_{provider}",
+        extra_conf={"spark.sql.sources.partitionOverwriteMode": "dynamic"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
     if provider == "rocksdb":
         spark.conf.set(PROVIDER_KEY, ROCKSDB)
 
-    if _events_ts_is_nanos(DATA_DIR):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = (
-            spark.readStream.schema(_events_stream_schema(T.LongType()))
-            .format("parquet")
-            .option("maxFilesPerTrigger", max_files)
-            .load(stream_src)
-        )
-        events = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    else:
-        events = (
-            spark.readStream.schema(_events_stream_schema(T.TimestampType()))
-            .format("parquet")
-            .option("maxFilesPerTrigger", max_files)
-            .load(stream_src)
-        )
+    events = ts_from_nanos(
+        spark.readStream.schema(events_schema(DATA_DIR))
+        .format("parquet")
+        .option("maxFilesPerTrigger", max_files)
+        .load(stream_src)
+    )
 
     shape, mode = (
         (_running_count, "update") if case == "t7b" else (_session_append, "append")
@@ -340,17 +303,11 @@ def _crash_child(case: str, provider: str, max_files: int,
 
 def _crash_digest(case: str, root: str, data_dir: str) -> dict:
     """Digest of a finished crash-leg output table (fresh tiny JVM)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("hc_crash_digest")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from jobhouse_spark.session import get_spark
+
+    spark = get_spark(app_name="hc_crash_digest")
     tbl = spark.read.parquet(f"{root}/out")
     if case == "t7b":
         # update mode re-emits per batch: final value is the max
@@ -386,9 +343,6 @@ def run_crash_recovery(case: str, provider: str, kill_batch: int,
     asserts recovered == control."""
     import shutil  # noqa: PLC0415
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "14g")
-    env = dict(os.environ,
-               PYSPARK_SUBMIT_ARGS=f"--driver-memory {mem} pyspark-shell")
     base = f"/tmp/jh_hc_crash_{case}_{provider}"
     shutil.rmtree(base, ignore_errors=True)
 
@@ -400,7 +354,7 @@ def run_crash_recovery(case: str, provider: str, kill_batch: int,
             argv.append(f"--kill-batch={kill}")
         t0 = time.perf_counter()
         proc = subprocess.run(argv, capture_output=True, text=True,
-                              env=env, timeout=3600)
+                              timeout=3600)
         proc.wall = round(time.perf_counter() - t0, 1)  # type: ignore[attr-defined]
         print(f"  {label}: rc={proc.returncode} wall={proc.wall}s")
         return proc
@@ -433,6 +387,7 @@ def run_crash_recovery(case: str, provider: str, kill_batch: int,
 
 
 def main() -> None:
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "14g")
     out_path = next((a.split("=", 1)[1] for a in sys.argv
                      if a.startswith("--json=")), None)
     max_files = int(next((a.split("=")[1] for a in sys.argv
@@ -466,19 +421,16 @@ def main() -> None:
     only = next((a.split("=", 1)[1].split(",") for a in sys.argv
                  if a.startswith("--cases=")), ["t7b", "t13w"])
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "14g")
     results: dict = {"corpus": DATA_DIR, "max_files_per_trigger": max_files,
-                     "driver_mem": mem, "cases": {}}
+                     "driver_mem": os.environ["SPARK_DRIVER_MEMORY"], "cases": {}}
     for case in only:
         name = CASES[case]
         row: dict = {}
         for provider in ("hdfs", "rocksdb"):
-            env = dict(os.environ,
-                       PYSPARK_SUBMIT_ARGS=f"--driver-memory {mem} pyspark-shell")
             proc = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), DATA_DIR,
                  f"--one={case}:{provider}", f"--max-files={max_files}"],
-                capture_output=True, text=True, env=env, timeout=3600,
+                capture_output=True, text=True, timeout=3600,
             )
             line = next((ln for ln in proc.stdout.splitlines()
                          if ln.startswith("HCSTRESS ")), None)

@@ -24,6 +24,8 @@ at this rung's key counts the comparison measures fixed overhead, not
 capacity — the semantics equivalence is the load-bearing result.
 
 Usage: python tools/state_store_suite.py [sf_dir] [--json=PATH]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 8g).
 """
 
 from __future__ import annotations
@@ -59,22 +61,11 @@ def main() -> None:
     out = next((a.split("=", 1)[1] for a in sys.argv
                 if a.startswith("--json=")), None)
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "8g")
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-
-    from pyspark.sql import SparkSession
-
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
     from jobhouse_spark.queries import all_queries
+    from jobhouse_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("state_store_suite")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="state_store_suite")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
 
     qs = all_queries()

@@ -62,6 +62,8 @@ Checks per trajectory (all Spark sides are the engine's functions):
 Usage:
   python tools/streaming_fuzz.py --seeds=0:220 [--json=STREAMFUZZ.json]
          [--checks=tumbling,session,...]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 6g).
 
 Exit 0 iff every check of every seed matched. The ledger file is
 append-mode: each campaign adds one record. CI pins seeds 0–2
@@ -662,23 +664,16 @@ def main() -> None:
     checks = [c.strip() for c in opt.get("checks", "").split(",") if c.strip()] \
         or list(CHECKS)
 
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = "--driver-memory 6g pyspark-shell"
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
     import duckdb  # noqa: PLC0415
-    from pyspark.sql import SparkSession  # noqa: PLC0415
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("streaming_fuzz")
+    from jobhouse_spark.session import get_spark  # noqa: PLC0415
+
+    spark = get_spark(app_name="streaming_fuzz", extra_conf={
         # small keyspaces: batch-sized stateful shuffles are pure
         # state-store overhead (streaming/jobs.pinned_shuffle rationale)
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        # match the engine session (ADVICE r13 / silver_fuzz lesson)
-        .config("spark.sql.ansi.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+        "spark.sql.shuffle.partitions": "4",
+    })
     duck = duckdb.connect()
     duck.execute("SET TimeZone='UTC'")
     # single-threaded oracle: campaign-2 seeds 262/291/313 showed the

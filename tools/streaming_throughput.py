@@ -27,15 +27,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from jobhouse_spark.session import get_spark  # noqa: E402
 from jobhouse_spark.streaming.jobs import (  # noqa: E402
     _events_stream_dir,
-    _events_stream_schema,
-    _events_ts_is_nanos,
     tumbling_counts,
 )
+from jobhouse_spark.tables import events_schema, ts_from_nanos  # noqa: E402
 
 DATA_DIR = sys.argv[1] if len(sys.argv) > 1 else "/tmp/jh_scale_30x"
 ROCKSDB = (
@@ -45,19 +42,8 @@ ROCKSDB = (
 
 def stream_events_opts(spark, sf_dir: str, max_files: int):
     """stream_events (streaming/jobs.py) + the maxFilesPerTrigger knob."""
-    import pyspark.sql.types as T  # noqa: PLC0415
-
-    if _events_ts_is_nanos(sf_dir):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = (
-            spark.readStream.schema(_events_stream_schema(T.LongType()))
-            .format("parquet")
-            .option("maxFilesPerTrigger", max_files)
-            .load(_events_stream_dir(sf_dir))
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return (
-        spark.readStream.schema(_events_stream_schema(T.TimestampType()))
+    return ts_from_nanos(
+        spark.readStream.schema(events_schema(sf_dir))
         .format("parquet")
         .option("maxFilesPerTrigger", max_files)
         .load(_events_stream_dir(sf_dir))

@@ -24,6 +24,8 @@ Usage:
   python tools/zorder_bench.py [sf_dir] [--table=orders]
          [--cols=o_custkey,o_orderkey] [--frag-files=256]
          [--target-mb=64] [--bins=256] [--sel=0.02] [--json=PATH]
+Cores from $SPARK_GRAFT_CPUS (default: all), heap from
+$SPARK_DRIVER_MEMORY (default 12g).
 """
 
 from __future__ import annotations
@@ -51,23 +53,14 @@ def main() -> None:
     bins = int(opt.get("bins", "256"))
     sel = float(opt.get("sel", "0.02"))
 
-    mem = os.environ.get("JH_SIM_DRIVER_MEM", "12g")
-    if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
-
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "12g")
     from pyspark.sql import functions as F
 
     from jobhouse_spark.operators.maintenance import compact_parquet, zorder_compact
+    from jobhouse_spark.session import get_spark
     from jobhouse_spark.tables import Tables
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("zorder_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="zorder_bench")
     # Pruning granularity is the ROW GROUP, not the file — size row
     # groups well below the file target so min/max skipping has slices
     # to work with (the 100 TB default of 128 MB groups in ~1 GB files
