@@ -804,7 +804,8 @@ def pq_build_index(
     exact-integer numpy encode (_encode_vectorized — bit-identical
     output, constant plan size, ~100x the per-row throughput; the
     right choice for bulk index builds, opted into explicitly e.g. by
-    tools/ivfpq_10m.py); 'auto' = expr while the components fit the
+    the 10M-vector build in SCALE.md, "IVF-PQ stored index at 10M
+    vectors"); 'auto' = expr while the components fit the
     codegen limit, vectorized beyond it (where expr would refuse).
     Both paths quantize via the JVM micro_vec, so the stored index is
     byte-identical either way (pinned by

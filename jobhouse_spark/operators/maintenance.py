@@ -323,10 +323,11 @@ def _list_data_files(spark: SparkSession, root: str) -> list[str]:
     `input_file_name()` exactly (verified in
     tests/test_operators_scale.py), so manifest keys join cleanly.
 
-    Implementation note (round 12, found by manifest_bench --update at
-    a 10^5-file table): iterating FileStatus objects through py4j
-    costs one JVM round trip per file (~5 ms) — 521 s for 100k files,
-    14x SLOWER than rebuilding the manifest from scratch.
+    Implementation note (round 12, found by an incremental update of
+    a 10^5-file table; SCALE.md, "Manifest at 10^5 files"): iterating
+    FileStatus objects through py4j costs one JVM round trip per file
+    (~5 ms) — 521 s for 100k files, 14x SLOWER than rebuilding the
+    manifest from scratch.
     `DataFrame.inputFiles()` runs Spark's own (parallel, JVM-side)
     listing and marshals the whole string array in ONE call; same
     measurement dropped to ~3 s. No data is read — only the FileIndex

@@ -8,9 +8,6 @@ driver's tables so the oracle can verify them; the HH-replay pipeline
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
 from collections.abc import Callable
 from datetime import datetime, timezone
 
@@ -26,20 +23,19 @@ from jobhouse_spark.sources.bronze import (
     read_bronze_day_slice,
     write_bronze_partitioned,
 )
-from jobhouse_spark.tables import Tables
+from jobhouse_spark.tables import Tables, scratch_dir
 
 # One bronze lake per (query, sf_dir) per session: the partitioned writer
 # appends, so re-invoking a query (bench repeats, driver retries) must NOT
-# re-write into the same root — build once, reuse the dir, remove at exit
-# instead of leaking a fresh mkdtemp per invocation.
+# re-write into the same root — build once and reuse the dir
+# (``scratch_dir`` removes it at exit).
 _BRONZE_ROOTS: dict[tuple[str, str], str] = {}
 
 
 def _session_bronze_root(tag: str, sf_dir: str, build: Callable[[str], None]) -> str:
     key = (tag, sf_dir)
     if key not in _BRONZE_ROOTS:
-        root = tempfile.mkdtemp(prefix=f"jh_{tag}_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        root = scratch_dir(tag)
         build(root)
         _BRONZE_ROOTS[key] = root
     return _BRONZE_ROOTS[key]

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from jobhouse_spark.operators.dedup import exact_dedup_by_content
 from jobhouse_spark.queries.registry import fin, register
-from jobhouse_spark.tables import Tables
+from jobhouse_spark.tables import Tables, scratch_dir
 
 # portable across Java regex (Spark) and RE2 (DuckDB): no lookarounds,
 # no backrefs, explicit classes
@@ -439,7 +439,6 @@ def l2e_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash_incremental_pairs end-to-end (cap-over-union semantics
     included), with md5 features both engines compute identically."""
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from jobhouse_spark.operators.similarity import (  # noqa: PLC0415
         minhash_incremental_pairs,
@@ -451,20 +450,9 @@ def l2e_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
 
     sigs, feats = minhash_index(index_docs, feature_hash="md5")
-    # path includes the Spark application id: two concurrent drivers
-    # over the same sf_dir must never share (and clobber) the index
-    # directory mid-read — md5(sf_dir) alone was world-shared. The
-    # per-app path would leak one parquet tree per application into
-    # /tmp, so removal is registered at interpreter exit (the returned
-    # frame is lazy — the files must outlive this function, but not
-    # the process).
-    import atexit  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    tag = __import__("hashlib").md5(sf_dir.encode()).hexdigest()[:8]
-    app_id = spark.sparkContext.applicationId
-    root = os.path.join(tempfile.gettempdir(), f"jh_l2e_{tag}_{app_id}")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    # a fresh dir per call: two concurrent drivers over the same sf_dir
+    # never share (and clobber) the index mid-read
+    root = scratch_dir("l2e")
     sigs.write.mode("overwrite").parquet(os.path.join(root, "sigs"))
     feats.write.mode("overwrite").parquet(os.path.join(root, "feats"))
     stored_sigs = spark.read.parquet(os.path.join(root, "sigs"))

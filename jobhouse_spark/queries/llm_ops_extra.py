@@ -712,8 +712,9 @@ def l23_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole table): with k pinned, cell population — and the per-cell
     pair test — grows quadratically with the corpus, which is exactly
     why SemDeDup grows k ∝ N. The unbounded scale shape IS exercised,
-    at scale-correct k, by tools/l23_scale_check.py (hash-checked at
-    30x/k=240 against this same oracle template)."""
+    at scale-correct k, by the run in SCALE.md, "SemDeDup at 30x: a
+    measured skew post-mortem" (hash-checked at 30x/k=240 against this
+    same oracle template)."""
     from jobhouse_spark.operators.ann import ivf_fixed_centroids, semantic_dedup  # noqa: PLC0415
 
     emb = Tables(spark, sf_dir).embeddings.filter(F.col("vec_id") < 2000)
@@ -795,7 +796,7 @@ def l23b_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines compute from scratch — so this one registered entry is
     exact at every sf (sf0.01 N=500 and sf0.1 N=2000 both at the k=8
     floor, the 30x corpus N=60000 at a grown k=240 —
-    the tools/l23_scale_check.py shape, now inside the registry
+    the shape of SCALE.md's "SemDeDup at 30x" run, now inside the registry
     contract instead of beside it). The only driver-side action is the
     O(1)-output COUNT that sizes the codebook — the analogue of
     SemDeDup's clustering step, and the same single extra pass a

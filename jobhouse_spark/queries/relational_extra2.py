@@ -2,13 +2,11 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jobhouse_spark.queries.registry import dec, dec_sql, fin, fin_sql, register
-from jobhouse_spark.tables import Tables
+from jobhouse_spark.tables import Tables, scratch_dir
 
 
 @register(
@@ -81,7 +79,7 @@ def g13_boolean_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s9_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9: ORC sink + scan round trip (second columnar format)."""
     o = Tables(spark, sf_dir).orders.select("o_orderkey", "o_totalprice")
-    out = tempfile.mkdtemp(prefix="jh_s9_")
+    out = scratch_dir("s9")
     o.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.agg(

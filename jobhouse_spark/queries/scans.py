@@ -12,13 +12,11 @@ lossy sink would fail the hash check.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jobhouse_spark.queries.registry import dec, dec_sql, fin, fin_sql, register
-from jobhouse_spark.tables import Tables
+from jobhouse_spark.tables import Tables, scratch_dir
 
 _NATION_AGG_ORACLE = (
     "SELECT COUNT(*) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS sum_key, "
@@ -64,7 +62,7 @@ def s1_parquet_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s2_jsonl_gz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2: gzip-JSONL sink + scan (bronze format, raw_layer.py:33-44 parity)."""
     n = Tables(spark, sf_dir).nation
-    out = tempfile.mkdtemp(prefix="jh_s2_")
+    out = scratch_dir("s2")
     n.write.mode("overwrite").option("compression", "gzip").json(out)
     back = spark.read.schema(n.schema).json(out)
     return _nation_agg(back)
@@ -74,7 +72,7 @@ def s2_jsonl_gz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3: CSV sink + schema-explicit scan (never inferSchema in prod)."""
     n = Tables(spark, sf_dir).nation
-    out = tempfile.mkdtemp(prefix="jh_s3_")
+    out = scratch_dir("s3")
     n.write.mode("overwrite").option("header", "true").csv(out)
     back = spark.read.schema(n.schema).option("header", "true").csv(out)
     return _nation_agg(back)
@@ -96,7 +94,7 @@ def s4_partitioned_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     this layout is what lets Catalyst prune to the scanned day/hour.
     """
     e = Tables(spark, sf_dir).events
-    out = tempfile.mkdtemp(prefix="jh_s4_")
+    out = scratch_dir("s4")
     (
         e.withColumn("year", F.year("ts"))
         .withColumn("month", F.month("ts"))
@@ -125,7 +123,7 @@ def s4_partitioned_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
 def s5_parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: parquet write/read round trip (zstd — the 100 TB default codec)."""
     l = Tables(spark, sf_dir).lineitem.select("l_orderkey", "l_extendedprice")
-    out = tempfile.mkdtemp(prefix="jh_s5_")
+    out = scratch_dir("s5")
     l.write.mode("overwrite").option("compression", "zstd").parquet(out)
     back = spark.read.parquet(out)
     return back.agg(
@@ -154,7 +152,7 @@ def s10_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the 100 TB answer for fact-to-fact joins repeated across a
     pipeline: pay the partitioning once at write time, never at read."""
     t = Tables(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="jh_s10_")
+    base = scratch_dir("s10")
     spark.sql("DROP TABLE IF EXISTS jh_s10_orders")
     spark.sql("DROP TABLE IF EXISTS jh_s10_customer")
     (
@@ -196,7 +194,7 @@ def s6_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partitionColumn/lowerBound/upperBound) so executors fetch ranges
     in parallel."""
     n = Tables(spark, sf_dir).nation
-    db = tempfile.mkdtemp(prefix="jh_s6_") + "/db"
+    db = scratch_dir("s6") + "/db"
     url = f"jdbc:derby:{db};create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     n.write.mode("overwrite").jdbc(url, "nation", properties=props)
@@ -229,7 +227,7 @@ def s11_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared multi-source design (docs/Pipeline Architecture.mermaid:3-7)
     is XML-shaped; round-trip must reproduce the source aggregate."""
     n = Tables(spark, sf_dir).nation
-    out = tempfile.mkdtemp(prefix="jh_s11_")
+    out = scratch_dir("s11")
     n.write.mode("overwrite").option("rootTag", "nations").option(
         "rowTag", "nation"
     ).format("xml").save(out)
@@ -251,7 +249,7 @@ def s16_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate-pushdown/column-pruning treatment as parquet from the
     same v2 scan framework."""
     n = Tables(spark, sf_dir).nation
-    out = tempfile.mkdtemp(prefix="jh_s16_")
+    out = scratch_dir("s16")
     n.write.mode("overwrite").format("orc").save(out)
     back = spark.read.format("orc").load(out)
     return _nation_agg(back)
@@ -264,7 +262,7 @@ def s12_text_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one record per line, parsed with F-family string ops, the
     raw_content philosophy of the reference's bronze layer)."""
     n = Tables(spark, sf_dir).nation
-    out = tempfile.mkdtemp(prefix="jh_s12_")
+    out = scratch_dir("s12")
     n.select(
         F.concat_ws(
             "\x1f",
@@ -462,12 +460,12 @@ def s17_compaction_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragment->compact->cluster->rewrite chain flips the hash.
 
     The pruning payoff (files/row-groups skipped by min-max stats for
-    a selective key predicate, before vs after) is measured separately
-    in tools/compaction_bench.py and recorded in SCALE.md."""
+    a selective key predicate, before vs after) is recorded in SCALE.md,
+    "Compaction + range-clustering, oracle-checked and measured"."""
     from jobhouse_spark.functions.hashing import md5_int32  # noqa: PLC0415
     from jobhouse_spark.operators.maintenance import compact_parquet  # noqa: PLC0415
 
-    base = tempfile.mkdtemp(prefix="jh_s17_")
+    base = scratch_dir("s17")
     frag, dst = base + "/frag", base + "/compacted"
     Tables(spark, sf_dir).orders.repartition(64).write.parquet(frag)
     comp = compact_parquet(
@@ -546,11 +544,11 @@ def s18_zorder_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes predicates on ``a`` perfectly and on ``b`` not at all;
     Morton interleaving gives every file a hyper-rectangle of the key
     space so min/max stats prune BOTH single-column predicates
-    (measured in tools/zorder_bench.py, recorded in SCALE.md)."""
+    (SCALE.md, "Z-order clustering: multi-column pruning")."""
     from jobhouse_spark.functions.hashing import md5_int32  # noqa: PLC0415
     from jobhouse_spark.operators.maintenance import zorder_compact  # noqa: PLC0415
 
-    base = tempfile.mkdtemp(prefix="jh_s18_")
+    base = scratch_dir("s18")
     frag, dst = base + "/frag", base + "/zordered"
     Tables(spark, sf_dir).orders.repartition(64).write.parquet(frag)
     z = zorder_compact(
@@ -631,7 +629,7 @@ def s19_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest_pruned_read,
     )
 
-    base = tempfile.mkdtemp(prefix="jh_s19_")
+    base = scratch_dir("s19")
     frag, dst = base + "/frag", base + "/clustered"
     Tables(spark, sf_dir).orders.repartition(32).write.parquet(frag)
     compact_parquet(
@@ -707,7 +705,7 @@ def s20_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobhouse_spark.functions.hashing import md5_int32  # noqa: PLC0415
     from jobhouse_spark.operators.maintenance import vacuum_partitions  # noqa: PLC0415
 
-    root = tempfile.mkdtemp(prefix="jh_s20_") + "/t"
+    root = scratch_dir("s20") + "/t"
     e = Tables(spark, sf_dir).events.withColumn(
         "day", F.to_date("ts").cast("string")
     )

@@ -269,10 +269,9 @@ def t14_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinels; maxFilesPerTrigger=1 forces that file→batch mapping.
     """
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
     import time as _time  # noqa: PLC0415
 
-    from jobhouse_spark.tables import Tables  # noqa: PLC0415
+    from jobhouse_spark.tables import Tables, scratch_dir  # noqa: PLC0415
 
     ev = (
         Tables(spark, sf_dir).events
@@ -280,7 +279,7 @@ def t14_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
     max_ts = ev.agg(F.max("ts")).first()[0]
-    d = tempfile.mkdtemp(prefix="jh_t14_")
+    d = scratch_dir("t14")
     ev.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "b0"))
     spark.createDataFrame(
         [(-1, max_ts, -1, "click", 0.0), (-2, max_ts, -1, "view", 0.0)],

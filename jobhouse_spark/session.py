@@ -8,7 +8,7 @@ Scale: AQE on (runtime shuffle coalescing, skew-join splitting, dynamic
 broadcast), Arrow for every Python<->JVM batch transfer. On a real
 cluster only ``master``/memory change — everything else here is
 cluster-safe: shuffle partitions are a starting hint that AQE re-coalesces
-at runtime, so the same code runs on local[32] and on 1000 executors.
+at runtime, so the same code runs on ``local[N]`` and on 1000 executors.
 """
 
 from __future__ import annotations
@@ -50,12 +50,12 @@ def get_spark(
     Multi-tenant sessions: pass
     ``extra_conf={"spark.scheduler.mode": "FAIR"}`` and have each query
     thread call ``sc.setLocalProperty("spark.scheduler.pool", <tenant>)``.
-    Measured at 30x (SCALE.md, tools/concurrency_bench.py): under the
-    default FIFO a 1.2 s query stuck behind big scans ran 5.3 s (4.3x
-    interference); FAIR pools cap interference at ~1.4x on substantive
-    queries and raise aggregate throughput (3.1x vs serial on 6
-    concurrent queries). Scheduler mode is fixed at context start — it
-    cannot be flipped on a live session.
+    Measured at 30x (SCALE.md, "Concurrent queries: FIFO vs FAIR"):
+    under the default FIFO a 1.2 s query stuck behind big scans ran
+    5.3 s (4.3x interference); FAIR pools cap interference at ~1.4x on
+    substantive queries and raise aggregate throughput (3.1x vs serial
+    on 6 concurrent queries). Scheduler mode is fixed at context start —
+    it cannot be flipped on a live session.
 
     DataFrame debugging is off
     (``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark 4.1

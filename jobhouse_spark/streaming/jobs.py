@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobhouse_spark.tables import events_schema, ts_from_nanos
+from jobhouse_spark.tables import events_schema, scratch_dir, ts_from_nanos
 
 _SINK_COUNTER = itertools.count()
 _STREAM_DIRS: dict[str, str] = {}
@@ -28,11 +28,10 @@ _STREAM_DIRS: dict[str, str] = {}
 
 def _events_stream_dir(sf_dir: str) -> str:
     """File-stream sources need a *directory*; expose the read-only
-    events.parquet through a symlink in a temp dir (created once)."""
+    events.parquet through a symlink in a temp dir (created once per
+    sf_dir, removed at exit)."""
     if sf_dir not in _STREAM_DIRS:
-        import tempfile  # noqa: PLC0415
-
-        d = tempfile.mkdtemp(prefix="jh_events_stream_")
+        d = scratch_dir("events_stream")
         src = os.path.join(sf_dir, "events.parquet")
         if os.path.isdir(src):
             # multi-file layout: link each part file flat into the

@@ -16,7 +16,10 @@ a fresh ``Tables`` per call.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +39,17 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh ``jh_<tag>_*`` temp dir, removed when the process exits.
+    The one way engine code makes scratch space: sink-and-scan queries
+    return lazy frames over what they wrote, so the files must outlive
+    the call, but not the process."""
+    d = tempfile.mkdtemp(prefix=f"jh_{tag}_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
 
 # session confs that change what parquet schema inference returns
 _INFERENCE_CONFS = (
@@ -145,27 +159,11 @@ class Tables:
         if name not in TABLE_NAMES:
             raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
         if name not in self._cache:
-            if self.sf_dir.startswith("table:"):
-                # catalog-backed resolution: sf_dir "table:<prefix>"
-                # resolves each table as spark.table(f"{prefix}{name}")
-                # — temp views or managed/external catalog tables. This
-                # is how a cluster deployment serves a BUCKETED layout
-                # (bucket metadata lives in the catalog, not the files),
-                # so every registry query can run unchanged against
-                # bucketed tables (tools/bucket_bench.py).
-                df = self.spark.table(f"{self.sf_dir[6:]}{name}")
-                if name == "events":
-                    # a catalog-registered RAW events table may carry ts
-                    # as nanos-read-as-bigint, as the path branch does;
-                    # register epoch-µs/-ms bigints as real timestamps
-                    # instead (see ts_from_nanos)
-                    df = ts_from_nanos(df)
+            path = os.path.join(self.sf_dir, f"{name}.parquet")
+            if name == "events":
+                df = self._load_events(path)
             else:
-                path = os.path.join(self.sf_dir, f"{name}.parquet")
-                if name == "events":
-                    df = self._load_events(path)
-                else:
-                    df = _read_parquet(self.spark, path)
+                df = _read_parquet(self.spark, path)
             self._cache[name] = df
         return self._cache[name]
 

@@ -63,8 +63,8 @@ def test_salted_join_bounds_hot_key_reducer(spark):
     table lands on ONE reducer unsalted, but spreads over (nearly) all
     n_salts salt values with a content-derived salt, so no single
     (key, salt) group exceeds ~2x the ideal hot_n/n_salts share. This
-    is the deterministic core of the wall-clock effect measured in
-    tools/skew_bench.py / SCALE.md."""
+    is the deterministic core of the wall-clock effect in SCALE.md,
+    "Measured: skew mitigation"."""
     from jobhouse_spark.operators.skew import _row_salt
 
     n, n_salts = 20_000, 16

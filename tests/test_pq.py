@@ -184,7 +184,7 @@ def test_trained_coarse_partial_probe_recall(spark, sf_dir, emb):
     trained PQ codebooks, partial probing (4 of 8 cells), shortlist
     100 + exact re-rank — must still hold most of the exact top-10.
     This is the fixed config the 30x operating-curve table
-    (tools/ivfpq_curve.py, SCALE.md round 9) anchors to; unlike
+    (SCALE.md, "IVF-PQ trained-codebook operating curve") anchors to; unlike
     test_trained_rerank_recall_vs_exact it does NOT probe all cells,
     so IVF routing error is inside the measurement. Threshold guards
     regressions, not luck (measured well above it)."""

@@ -1,11 +1,13 @@
 """Session factory settings: those read from the environment, the
 driver-side DataFrame debugging the factory turns off, and the tools
-that must build their sessions through it."""
+that must build their sessions through it (and that README lists)."""
 
 from __future__ import annotations
 
 import glob
+import importlib
 import os
+import re
 
 import pyspark.errors.utils as errors_utils
 import pytest
@@ -65,11 +67,14 @@ def test_ansi_error_keeps_its_class_without_call_sites(spark):
         spark.range(1).select((F.col("id") / 0).alias("x")).collect()
 
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def test_tools_build_sessions_through_get_spark():
     """Every tool but ``driver_sim.py`` (which stands in for the driver's
     own vanilla session) gets its session, cores and heap from
     ``get_spark``: no hand-built builder, no private heap plumbing."""
-    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    tools = os.path.join(REPO, "tools")
     forks = sorted(
         os.path.basename(p)
         for p in glob.glob(os.path.join(tools, "*.py"))
@@ -77,3 +82,16 @@ def test_tools_build_sessions_through_get_spark():
         and any(m in open(p).read() for m in ("SparkSession.builder", "PYSPARK_SUBMIT_ARGS"))
     )
     assert forks == []
+
+
+def test_tools_match_readme_and_import():
+    """README's tools list names exactly the tools on disk, and each tool
+    module imports (no Spark, no ``main()``): a tool nothing runs
+    cannot rot unnoticed."""
+    on_disk = {os.path.basename(p) for p in glob.glob(os.path.join(REPO, "tools", "*.py"))}
+    with open(os.path.join(REPO, "README.md")) as f:
+        listed = set(re.findall(r"^tools/(\S+)", f.read(), flags=re.M))
+    assert {n for n in listed if not os.path.exists(os.path.join(REPO, "tools", n))} == set()
+    assert on_disk - listed == set()
+    for name in sorted(on_disk):
+        importlib.import_module(f"tools.{name.removesuffix('.py')}")

@@ -1,9 +1,13 @@
 """Table loading: a path's parquet schema is inferred once per process
 and re-inferred when the files under it change; nanos events files are
-read without touching the caller's session confs."""
+read without touching the caller's session confs; the scratch dirs that
+sink-and-scan queries write are gone when the process exits."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import uuid
 
 import numpy as np
@@ -12,6 +16,8 @@ import pyarrow.parquet as pq
 
 from jobhouse_spark.streaming.jobs import run_to_memory, stream_events
 from jobhouse_spark.tables import Tables
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _jobs_while(spark, fn) -> list[int]:
@@ -80,3 +86,28 @@ def test_nanos_events_read_without_session_conf(spark, tmp_path):
     assert micros(Tables(spark, str(tmp_path)).events) == want
     assert micros(run_to_memory(stream_events(spark, str(tmp_path)))) == want
     assert spark.conf.get(conf, None) is None
+
+
+# every registry entry that writes scratch files, and one events stream
+_SCRATCH_RUN = """
+import re, sys
+from jobhouse_spark.queries import all_queries
+from jobhouse_spark.session import get_spark
+from jobhouse_spark.streaming.jobs import run_to_memory, stream_events
+spark, sf = get_spark(app_name="jh_scratch_test"), sys.argv[1]
+pat = re.compile(r"(s([2-6]|9|1[0-2]|1[6-9]|20)|t14|a8|l2e)_")
+qs = [q for n, q in all_queries().items() if pat.match(n)]
+assert len(qs) == 17, [q.name for q in qs]
+for q in qs:
+    q.fn(spark, sf).collect()
+run_to_memory(stream_events(spark, sf)).collect()
+"""
+
+
+def test_scratch_dirs_removed_at_exit(sf_dir, tmp_path):
+    """A process that runs the sink-and-scan queries and a stream read
+    leaves no ``jh_*`` dir in its temp dir once it exits."""
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": REPO}
+    subprocess.run([sys.executable, "-c", _SCRATCH_RUN, sf_dir], env=env,
+                   cwd=tmp_path, check=True, timeout=300)
+    assert sorted(p.name for p in tmp_path.iterdir() if p.name.startswith("jh_")) == []

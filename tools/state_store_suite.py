@@ -1,10 +1,10 @@
 """RocksDB vs HDFS-backed state store across the STATEFUL query suite.
 
 Round-8 measured the RocksDB provider only on t2's tumbling window
-(tools/streaming_throughput.py). This closes the gap: the three
-heaviest stateful shapes run under BOTH providers on a scale rung, the
-collected results are hash-compared (the provider must be invisible to
-semantics), and wall/throughput is recorded per provider:
+(SCALE.md, "Streaming micro-batch throughput"). This closes the gap:
+the three heaviest stateful shapes run under BOTH providers on a scale
+rung, the collected results are hash-compared (the provider must be
+invisible to semantics), and wall/throughput is recorded per provider:
 
   t7b  applyInPandasWithState running count (custom Python state,
        update mode, max-per-key collapse — the registry's checked twin)
